@@ -86,6 +86,10 @@ def sessionize_stream(
     watermark (same sessions, same rows: a per-key timeout would have
     fired for exactly the sessions whose expiry the watermark passed).
     Requires a watermark on the input's ``ts`` column.
+
+    Checkpoint format: state is keyed by bucket, not by user, so a
+    checkpoint written by the earlier per-user layout cannot be resumed;
+    start such a query from a fresh checkpoint.
     """
     from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
@@ -134,14 +138,16 @@ def sessionize_stream(
                     cur[1] = ts_us
                     cur[2] += 1
         # Watermark sweep (both paths): close every session whose expiry
-        # the watermark has passed. In the data path this covers bucket
+        # the watermark is strictly past — Spark's per-key EventTimeTimeout
+        # fires only on timeout < watermark, and the batch shape splits
+        # only on gap > timeout. In the data path this covers bucket
         # members WITHOUT new rows (their per-key timeout would have fired
         # as a separate invocation under per-key grouping); in the timeout
         # path it is the timeout handler itself.
         wm_ms = state.getCurrentWatermarkMs()
         if wm_ms > 0:
             for uid in list(open_st):
-                if open_st[uid][1] // 1_000 + gap_ms <= wm_ms:
+                if open_st[uid][1] // 1_000 + gap_ms < wm_ms:
                     close(uid, open_st.pop(uid))
         if open_st:
             state.update(
@@ -152,7 +158,7 @@ def sessionize_stream(
                     [v[2] for v in open_st.values()],
                 )
             )
-            # re-arm at the bucket's earliest remaining expiry (all > wm
+            # re-arm at the bucket's earliest remaining expiry (all >= wm
             # after the sweep, so the engine's timestamp-vs-watermark
             # validation always holds)
             state.setTimeoutTimestamp(

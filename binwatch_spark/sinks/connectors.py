@@ -11,15 +11,20 @@ Two extra connector types exist for hermetic tests: ``memory`` (collects
 payloads in-process) and ``file`` (appends one payload per line) — they play
 the role of the reference's manual integration endpoint (README.md:216).
 
-Network libraries are import-gated so the module is importable anywhere;
-delivery semantics are at-least-once (checkpoint commits after the batch —
-blsenderwork.go:193-213).
+The webhook speaks HTTP through the standard library over one keep-alive
+connection per connector instance; only Pub/Sub's client library is
+import-gated. Delivery is at-least-once (the checkpoint commits after the
+batch — blsenderwork.go:193-213).
 """
 
 from __future__ import annotations
 
+import base64
+import http.client
 import os
+import ssl
 from abc import ABC, abstractmethod
+from urllib.parse import urlsplit
 
 from binwatch_spark.config import ConnectorConfig
 
@@ -31,42 +36,65 @@ class Connector(ABC):
     def send(self, payload: bytes) -> None:
         """Deliver one rendered payload; raise on failure."""
 
+    def close(self) -> None:
+        """Release held resources (a no-op unless the connector holds any)."""
+
 
 class WebhookConnector(Connector):
+    """One persistent HTTP/1.1 connection per connector instance, like the
+    reference's pooled keep-alive ``http.Client``. A reused connection the
+    server has since closed is reopened once and the payload resent —
+    at-least-once delivery allows the resend."""
+
     def __init__(self, cfg: ConnectorConfig):
+        wh = cfg.webhook
+        url = urlsplit(wh.url)
+        self._method = wh.method or "POST"
+        self._target = (url.path or "/") + (f"?{url.query}" if url.query else "")
+        self._headers = dict(wh.headers or {})
+        # connectors.webhook.go:59-61: basic auth only when BOTH creds are
+        # set AND no explicit Authorization header exists.
+        has_auth_header = any(k.lower() == "authorization" for k in self._headers)
+        if wh.username and wh.password and not has_auth_header:
+            token = base64.b64encode(f"{wh.username}:{wh.password}".encode())
+            self._headers["Authorization"] = "Basic " + token.decode("ascii")
+        if url.scheme == "https":
+            context = ssl.create_default_context()
+            if wh.tls_skip_verify:
+                context.check_hostname = False
+                context.verify_mode = ssl.CERT_NONE
+            self._conn = http.client.HTTPSConnection(
+                url.hostname, url.port or 443, timeout=30, context=context
+            )
+        else:
+            self._conn = http.client.HTTPConnection(
+                url.hostname, url.port or 80, timeout=30
+            )
+
+    def _post(self, payload: bytes) -> int:
         try:
-            import requests
-        except ImportError as exc:  # pragma: no cover
-            raise ImportError(
-                "webhook connector requires the 'requests' package"
-            ) from exc
-        self._requests = requests
-        self._cfg = cfg.webhook
+            self._conn.request(self._method, self._target, payload, self._headers)
+            resp = self._conn.getresponse()
+            resp.read()  # drain the body so the connection can carry the next request
+        except (OSError, http.client.HTTPException):
+            self._conn.close()  # the next request starts on a fresh connection
+            raise
+        return resp.status
 
     def send(self, payload: bytes) -> None:
-        kwargs: dict = {
-            "headers": self._cfg.headers or None,
-            "data": payload,
-            "timeout": 30,
-        }
-        # connectors.webhook.go:59-61: basic auth only when BOTH creds are
-        # set AND no explicit Authorization header wins (requests' auth=
-        # would silently override one).
-        has_auth_header = any(
-            k.lower() == "authorization" for k in (self._cfg.headers or {})
-        )
-        if self._cfg.username and self._cfg.password and not has_auth_header:
-            kwargs["auth"] = (self._cfg.username, self._cfg.password)
-        if self._cfg.tls_skip_verify:
-            kwargs["verify"] = False
-        resp = self._requests.request(
-            self._cfg.method or "POST", self._cfg.url, **kwargs
-        )
+        reused = self._conn.sock is not None
+        try:
+            status = self._post(payload)
+        except (ConnectionResetError, BrokenPipeError):  # incl. RemoteDisconnected
+            if not reused:
+                raise
+            status = self._post(payload)  # the server dropped the idle connection
         # connectors.webhook.go:71-73: any non-2xx is an error.
-        if not 200 <= resp.status_code < 300:
-            raise RuntimeError(
-                f"unexpected status code {resp.status_code} sending data"
-            )
+        if not 200 <= status < 300:
+            raise RuntimeError(f"unexpected status code {status} sending data")
+
+    def close(self) -> None:
+        self._conn.close()
 
 
 class PubSubConnector(Connector):

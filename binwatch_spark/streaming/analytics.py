@@ -235,7 +235,11 @@ def scd2_stream(df: DataFrame, state_buckets: int | None = None) -> DataFrame:
     arrival must be event-time ordered per key across micro-batches
     (the CDC pipeline's per-key ordering contract; the bounded harness
     stages ts-ranged batches). Input needs (user_id, event_type, ts,
-    event_id)."""
+    event_id).
+
+    Checkpoint format: state is keyed by bucket, not by user, so a
+    checkpoint written by the earlier per-user layout cannot be resumed;
+    start such a query from a fresh checkpoint."""
     from collections.abc import Iterator
 
     import pandas as pd

@@ -9,22 +9,30 @@ Topology parity with the reference (binwatch.go:118-144, SURVEY §3.2):
       → itemByRow explode (P3)
       → item sequencing (Q1)              row_number per micro-batch
       → shard filter (R1)                 FNV-1a64 UDF (sharding.py)
-      → per route: predicate (R2),        foreachBatch: filter → render →
-        template render (T1),               repartition(senderWorkers) →
-        connector send (K1/K2)              foreachPartition send
+      → per route: predicate (R2),        foreachBatch, one pass: one flag
+        template render (T1),               column per route → keep rows any
+        connector send (K1/K2)              route matches → one sender walks
+                                            the routes per row (driver for
+                                            senderWorkers=1, else
+                                            foreachPartition)
       → checkpoint commit (C1)            streaming offset log, per batch
 
 Semantics preserved: at-least-once (send happens inside the batch, the
 offset commits after — crash between send and commit ⇒ redelivery,
 blsenderwork.go:193-213); ordering guaranteed only with senderWorkers=1
-(README.md:38) — we sort the batch by (binlog_file, binlog_position) and
-coalesce to one partition in that case; first route error aborts the batch
-(→ retry) like the reference aborts remaining routes (blsenderwork.go:197).
+(README.md:38) — the batch is sorted once by (binlog_file,
+binlog_position) into one partition and sent from the driver in that
+order; first route error aborts the batch (→ retry) like the reference
+aborts remaining routes (blsenderwork.go:197).
 """
 
 from __future__ import annotations
 
+import json
+import operator
+from collections.abc import Iterable
 from dataclasses import dataclass
+from functools import reduce
 from typing import Callable
 
 import pandas as pd
@@ -264,61 +272,118 @@ def _shard_filter(df: DataFrame, cfg: JobConfig) -> DataFrame:
     return df.filter(shard == F.lit(index))
 
 
-def make_batch_processor(
-    cfg: JobConfig, routes: list[CompiledRoute] | None = None
-) -> Callable[[DataFrame, int], None]:
-    """The R2→T1→K1 stage as a foreachBatch function: route fan-out, template
-    render, connector send, with senderWorkers parallelism. ``routes``
-    restricts the processor to a subset — the per-route-query topology
-    (run_routes_concurrent) passes exactly one."""
-    if routes is None:
-        routes = compile_routes(cfg)
-    connector_cfgs = {c.name: c for c in cfg.connectors}
-    workers = max(1, cfg.server.sender_workers)
+def _route_flag(i: int) -> str:
+    return f"__route_{i}"
 
-    def process_batch(batch_df: DataFrame, batch_id: int) -> None:
-        batch_df = _sequence_batch(batch_df, workers)
-        batch_df = _shard_filter(batch_df, cfg)
-        for route in routes:  # R3: routes evaluated in declared order
-            pred = cdc.route_predicate(
+
+class _RouteSender:
+    """R3→T1→K1 for one process: each row is tested against every route in
+    declared order (blsenderwork.go:182-199), rendered and sent to each
+    route whose predicate matched. Templates compile once and connectors
+    open lazily once per connector name, so a sender holds one connection
+    per connector for its whole life."""
+
+    def __init__(self, routes: list[CompiledRoute], connector_cfgs: dict):
+        self._routes = [
+            (
+                _route_flag(i),
+                route.connector_name,
+                compile_template(route.template, seeded_random=route.seeded_random)
+                if route.template
+                else None,
+            )
+            for i, route in enumerate(routes)
+        ]
+        self._connector_cfgs = connector_cfgs
+        self._connectors: dict = {}
+
+    def send(self, rows: Iterable) -> None:
+        for row in rows:
+            for flag, connector_name, render in self._routes:
+                if not row[flag]:
+                    continue
+                # a fresh item per route: sprig's set/unset/merge mutate it
+                d = row.asDict(recursive=True)
+                item = item_from_row(d, d["item_id"])
+                if render is not None:
+                    payload = render(item)
+                else:
+                    payload = json.dumps(item, separators=(",", ":"), default=str)
+                self._connector(connector_name).send(payload.encode("utf-8"))
+
+    def _connector(self, name: str):
+        connector = self._connectors.get(name)
+        if connector is None:
+            connector = make_connector(self._connector_cfgs[name])
+            self._connectors[name] = connector
+        return connector
+
+    def close(self) -> None:
+        for connector in self._connectors.values():
+            connector.close()
+
+
+def _route_rows(
+    batch_df: DataFrame, cfg: JobConfig, routes: list[CompiledRoute], workers: int
+) -> DataFrame:
+    """Q1 + R1 + R2 as one plan: sequence and shard-filter the batch, add
+    one boolean column per route predicate (``_route_flag(i)``) and keep
+    the rows at least one route matches."""
+    flags = [
+        F.coalesce(
+            cdc.route_predicate(
                 F.col("operation"),
                 F.concat(F.col("database"), F.lit("."), F.col("table")),
                 route.operations,
                 route.db_table,
-            )
-            matched = batch_df.filter(pred)
-            if workers == 1:
-                # ordered delivery: one partition, binlog order
-                matched = matched.orderBy("binlog_file", "binlog_position").coalesce(1)
-            else:
-                matched = matched.repartition(workers)
-            conn_cfg = connector_cfgs[route.connector_name]
-            template = route.template
-            seeded = route.seeded_random
+            ),
+            F.lit(False),
+        ).alias(_route_flag(i))
+        for i, route in enumerate(routes)
+    ]
+    any_route = reduce(
+        operator.or_, [F.col(_route_flag(i)) for i in range(len(routes))], F.lit(False)
+    )
+    batch_df = _shard_filter(_sequence_batch(batch_df, workers), cfg)
+    return batch_df.select("*", *flags).filter(any_route)
 
-            def send_partition(
-                rows, _conn_cfg=conn_cfg, _template=template, _seeded=seeded
-            ):
-                import json as _json
 
-                connector = make_connector(_conn_cfg)
-                render = (
-                    compile_template(_template, seeded_random=_seeded)
-                    if _template
-                    else None
-                )
-                for row in rows:
-                    d = row.asDict(recursive=True)
-                    item = item_from_row(d, d.get("item_id", 0))
-                    if render is not None:
-                        payload = render(item)
-                    else:
-                        payload = _json.dumps(
-                            item, separators=(",", ":"), default=str
-                        )
-                    connector.send(payload.encode("utf-8"))
+def make_batch_processor(
+    cfg: JobConfig, routes: list[CompiledRoute] | None = None
+) -> Callable[[DataFrame, int], None]:
+    """The R2→T1→K1 stage as a foreachBatch function, one Spark action per
+    trigger: the batch is sequenced and shard-filtered once, each route's
+    predicate becomes a boolean column, rows no route matches are dropped,
+    and a single sender walks the routes for every row. ``routes``
+    restricts the processor to a subset — the per-route-query topology
+    (run_routes_concurrent) passes exactly one.
 
-            matched.foreachPartition(send_partition)
+    senderWorkers == 1 sends from the driver through ``toLocalIterator``:
+    _sequence_batch's global window already leaves the batch sorted in one
+    partition, so binlog order costs that one sort, and the driver's
+    sender (one connection per connector) lives as long as the query.
+    ``maxFilesPerTrigger`` (the pool size) bounds what a trigger brings to
+    the driver. senderWorkers > 1 sends from ``senderWorkers`` partitions,
+    each with its own connections."""
+    if routes is None:
+        routes = compile_routes(cfg)
+    connector_cfgs = {c.name: c for c in cfg.connectors}
+    workers = max(1, cfg.server.sender_workers)
+    driver_sender = _RouteSender(routes, connector_cfgs) if workers == 1 else None
+
+    def send_partition(rows) -> None:
+        sender = _RouteSender(routes, connector_cfgs)
+        try:
+            sender.send(rows)
+        finally:
+            sender.close()
+
+    def process_batch(batch_df: DataFrame, batch_id: int) -> None:
+        matched = _route_rows(batch_df, cfg, routes, workers)
+        if driver_sender is not None:
+            driver_sender.send(matched.toLocalIterator())
+        else:
+            matched.repartition(workers).foreachPartition(send_partition)
 
     return process_batch
 

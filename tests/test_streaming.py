@@ -281,26 +281,45 @@ def test_key_template_shard_plan_has_no_render_udf(spark, tmp_path):
 
 
 class _FlakyWebhook:
-    """Local HTTP sink that 500s the first `fail_n` requests, then 200s —
-    the webhook-down-then-recovers scenario behind restartSyncerOnError."""
+    """Local HTTP/1.1 keep-alive sink that 500s the first `fail_n` requests
+    (only those to `fail_path`, when given), then 200s — the
+    webhook-down-then-recovers scenario behind restartSyncerOnError. It
+    counts the connections it accepts and records every request's path,
+    Authorization header and body."""
 
-    def __init__(self, fail_n: int):
+    def __init__(self, fail_n: int = 0, fail_path: str | None = None):
         import threading
-        from http.server import BaseHTTPRequestHandler, HTTPServer
+        from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
 
-        self.received: list[bytes] = []
+        self.received: list[bytes] = []  # bodies answered 200
+        self.requests: list[tuple[str, str | None, bytes]] = []
+        self.connections = 0
+        self.sockets: list = []
         self.fails_left = fail_n
+        lock = threading.Lock()
         outer = self
 
         class Handler(BaseHTTPRequestHandler):
+            protocol_version = "HTTP/1.1"
+
+            def setup(self):
+                super().setup()
+                with lock:
+                    outer.connections += 1
+                    outer.sockets.append(self.connection)
+
             def do_POST(self):
                 body = self.rfile.read(int(self.headers.get("Content-Length", 0)))
-                if outer.fails_left > 0:
-                    outer.fails_left -= 1
-                    status = 500
-                else:
-                    outer.received.append(body)
-                    status = 200
+                with lock:
+                    outer.requests.append(
+                        (self.path, self.headers.get("Authorization"), body)
+                    )
+                    if outer.fails_left > 0 and fail_path in (None, self.path):
+                        outer.fails_left -= 1
+                        status = 500
+                    else:
+                        outer.received.append(body)
+                        status = 200
                 self.send_response(status)
                 self.send_header("Content-Length", "0")
                 self.end_headers()
@@ -308,19 +327,33 @@ class _FlakyWebhook:
             def log_message(self, *args):
                 return
 
-        self.httpd = HTTPServer(("127.0.0.1", 0), Handler)
+        self.httpd = ThreadingHTTPServer(("127.0.0.1", 0), Handler)
+        self.httpd.daemon_threads = True
         self.port = self.httpd.server_address[1]
         threading.Thread(target=self.httpd.serve_forever, daemon=True).start()
 
+    def drop_connections(self):
+        """Close every open connection server-side, as an idle timeout does."""
+        import socket
+
+        for sock in self.sockets:
+            try:
+                sock.shutdown(socket.SHUT_RDWR)
+            except OSError:
+                pass
+
+    def bodies(self, path: str) -> list[bytes]:
+        return [body for p, _, body in self.requests if p == path]
+
     def shutdown(self):
         self.httpd.shutdown()
+        self.httpd.server_close()
 
 
 def test_restart_syncer_on_error_recovers(spark, tmp_path):
     """restartSyncerOnError parity (blreaderwork.go:149-190): a dying sink
     fails the query; the supervisor restarts it from the checkpoint and the
     un-committed batch is redelivered (at-least-once)."""
-    pytest.importorskip("requests")
     from binwatch_spark.streaming.pipeline import run_supervised
 
     tmp = str(tmp_path)
@@ -351,7 +384,6 @@ def test_restart_syncer_on_error_recovers(spark, tmp_path):
 def test_restart_disabled_propagates(spark, tmp_path):
     from binwatch_spark.streaming.pipeline import run_supervised
 
-    pytest.importorskip("requests")
     tmp = str(tmp_path)
     write_replay(f"{tmp}/replay", EVENTS)
     sink = _FlakyWebhook(fail_n=10**9)  # always failing
@@ -1014,42 +1046,129 @@ def test_positional_binder_empty_schema_map_drops_everything(spark):
     }
 
 
+def _webhook_connector(url: str, **fields):
+    from binwatch_spark.config import ConnectorConfig, WebhookConfig
+    from binwatch_spark.sinks.connectors import WebhookConnector
+
+    return WebhookConnector(
+        ConnectorConfig(
+            name="hook", type="webhook", webhook=WebhookConfig(url=url, **fields)
+        )
+    )
+
+
 def test_webhook_auth_header_precedence():
     """connectors.webhook.go:59-61 parity: basic auth applies only when
     BOTH credentials are set AND no explicit Authorization header exists —
-    an explicit header must never be clobbered by requests' auth kwarg."""
-    from binwatch_spark.config import WebhookConfig
-    from binwatch_spark.sinks.connectors import WebhookConnector
+    an explicit header is never clobbered by the credentials."""
+    import base64
 
-    calls = []
+    sink = _FlakyWebhook()
+    try:
+        def auth_received(**fields):
+            _webhook_connector(f"http://127.0.0.1:{sink.port}/hook", **fields).send(b"x")
+            return sink.requests[-1][1]
 
-    class _Resp:
-        status_code = 200
+        # both creds, no header → basic auth
+        assert auth_received(username="u", password="p") == (
+            "Basic " + base64.b64encode(b"u:p").decode("ascii")
+        )
+        # explicit Authorization header wins over the credentials
+        assert auth_received(
+            username="u", password="p", headers={"Authorization": "Bearer t"}
+        ) == "Bearer t"
+        # one credential only → no header (the reference requires both)
+        assert auth_received(username="u") is None
+    finally:
+        sink.shutdown()
 
-    class _FakeRequests:
-        @staticmethod
-        def request(method, url, **kwargs):
-            calls.append((method, url, kwargs))
-            return _Resp()
 
-    def make(**fields):
-        c = WebhookConnector.__new__(WebhookConnector)
-        c._requests = _FakeRequests()
-        c._cfg = WebhookConfig(url="http://example.invalid/hook", **fields)
-        return c
+def test_webhook_keep_alive_reconnects_once_and_raises_on_5xx():
+    """One connection carries every send; a connection the server closed
+    while idle is reopened and the payload delivered once; a 500 raises
+    and is not resent."""
+    import time
 
-    # both creds, no header → basic auth
-    make(username="u", password="p").send(b"x")
-    assert calls[-1][2]["auth"] == ("u", "p")
-    # explicit Authorization header wins; auth kwarg absent
-    make(
-        username="u", password="p", headers={"Authorization": "Bearer t"}
-    ).send(b"x")
-    assert "auth" not in calls[-1][2]
-    assert calls[-1][2]["headers"] == {"Authorization": "Bearer t"}
-    # one credential only → no auth (reference requires both)
-    make(username="u").send(b"x")
-    assert "auth" not in calls[-1][2]
+    sink = _FlakyWebhook(fail_n=10**9, fail_path="/down")
+    try:
+        hook = _webhook_connector(f"http://127.0.0.1:{sink.port}/hook")
+        for i in range(50):
+            hook.send(b"%d" % i)
+        assert sink.connections == 1
+        assert sink.bodies("/hook") == [b"%d" % i for i in range(50)]
+
+        sink.drop_connections()
+        time.sleep(0.2)  # let the FIN reach the client's idle socket
+        hook.send(b"after-drop")
+        assert sink.connections == 2
+        assert sink.bodies("/hook").count(b"after-drop") == 1
+
+        down = _webhook_connector(f"http://127.0.0.1:{sink.port}/down")
+        with pytest.raises(RuntimeError, match="500"):
+            down.send(b"lost")
+        assert sink.bodies("/down") == [b"lost"]
+    finally:
+        sink.shutdown()
+
+
+def test_single_pass_fan_out_order_and_redelivery(spark, tmp_path):
+    """Two routes, senderWorkers 1, a replay spanning a binlog rotation:
+    one sorted pass sends each route exactly its events in binlog order.
+    A 500 from the second route's sink aborts the batch before its
+    commit, and run_supervised redelivers it (at-least-once)."""
+    import contextlib
+    import io
+
+    from binwatch_spark.sources.envelope import read_envelope_batch
+    from binwatch_spark.streaming.pipeline import (
+        _route_rows,
+        compile_routes,
+        envelope_transform,
+        run_supervised,
+    )
+
+    tmp = str(tmp_path)
+    write_replay(f"{tmp}/replay", EVENTS)
+    sink = _FlakyWebhook(fail_n=1, fail_path="/all")
+    try:
+        doc = make_cfg(tmp)
+        doc["server"]["restartSyncerOnError"] = True
+        doc["server"]["stopInError"] = True
+        doc["connectors"] = [
+            {"name": "sink-insert", "type": "webhook",
+             "webhook": {"url": f"http://127.0.0.1:{sink.port}/inserts"}},
+            {"name": "sink-all", "type": "webhook",
+             "webhook": {"url": f"http://127.0.0.1:{sink.port}/all"}},
+        ]
+        cfg = parse(doc)
+
+        # the ordered plan sorts once, inside _sequence_batch's window
+        batch = envelope_transform(read_envelope_batch(spark, f"{tmp}/replay"), cfg)
+        buf = io.StringIO()
+        with contextlib.redirect_stdout(buf):
+            _route_rows(batch, cfg, compile_routes(cfg), workers=1).explain()
+        assert buf.getvalue().count(" Sort [") == 1
+
+        run_supervised(spark, cfg, available_now=True, max_restarts=3)
+        assert os.path.exists(f"{tmp}/checkpoint/commits/0")
+
+        # first attempt: event 1 reached /inserts, then /all answered 500
+        # and the batch aborted; the redelivered batch sends everything
+        inserts = [json.loads(b)["itemID"] for b in sink.bodies("/inserts")]
+        assert inserts == ["1", "1", "4"]
+        sent_all = [json.loads(b) for b in sink.bodies("/all")]
+        order = [(p["Log"]["BinlogFile"], p["Log"]["BinlogPosition"]) for p in sent_all]
+        assert order[0] == ("mysql-bin.000001", 100)  # the 500'd attempt
+        assert order[1:] == [
+            ("mysql-bin.000001", 100),
+            ("mysql-bin.000001", 200),
+            ("mysql-bin.000002", 50),
+            ("mysql-bin.000002", 80),
+        ]
+        # each webhook kept one connection per query run
+        assert sink.connections == 4
+    finally:
+        sink.shutdown()
 
 
 def test_gtid_checkpoint_cycle_across_rotate(spark, tmp_path):
@@ -1199,7 +1318,6 @@ def test_concurrent_routes_independent_checkpoints_and_restart(
     its uncommitted batch (per-route at-least-once) while the healthy
     route's re-run commits nothing new (its offset log already covers the
     source)."""
-    pytest.importorskip("requests")
     from binwatch_spark.streaming.pipeline import run_routes_concurrent
 
     tmp = str(tmp_path)
