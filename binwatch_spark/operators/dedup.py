@@ -20,8 +20,6 @@ subexpressions otherwise (see each function's docstring).
 
 from __future__ import annotations
 
-import os
-
 import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
@@ -41,12 +39,11 @@ from binwatch_spark.tables import spread
 # units from the text column: distinct_tokens (order-insensitive) or
 # char_shingles (order-aware).
 
-# Eagerly fill persisted intermediates (signature/token caches) with a
-# count() before the consuming joins. ON by default: concurrent scans of a
-# lazily-filled cache race and re-run the Arrow kernel per side (observed
-# 43 s vs 11 s at sf0.1 for q23's signature table). Settable to "0" for
-# A/B profiling of the fill cost itself (tools/bench_subset.py).
-_EAGER = os.environ.get("SPARK_GRAFT_DEDUP_EAGER", "1") != "0"
+# Persisted intermediates (signature/token caches) are filled with a
+# count() right after persist(), before the consuming joins: concurrent
+# scans of a lazily-filled cache race and re-run the Arrow kernel per side
+# (observed 43 s vs 11 s at sf0.1 for q23's signature table). The plans
+# that follow the same two-consumer persist pattern do the same.
 
 # Index-probe hot-bucket cap: band keys with more than this many member
 # docs in the band table are excluded from candidate generation (the
@@ -71,15 +68,6 @@ _EAGER = os.environ.get("SPARK_GRAFT_DEDUP_EAGER", "1") != "0"
 # per-band distinct keys approach 1e8 (at 100 TB the band count, not the
 # key width, is the lever).
 BAND_KEY_CAP = 100
-
-
-def eager_enabled() -> bool:
-    """Whether persist()ed intermediates are filled EAGERLY (a count() right
-    after persist) so concurrent downstream stages don't race to populate a
-    lazy cache, each recomputing the pipeline. Shared by the dedup operators
-    and the plans that follow the same two-consumer persist pattern; off via
-    SPARK_GRAFT_DEDUP_EAGER=0."""
-    return _EAGER
 
 
 def exact_dedup(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
@@ -445,8 +433,7 @@ def minhash_lsh_pairs(
                 for b in range(N_BANDS)
             ],
         ).persist()
-    if _EAGER:
-        keyed.count()
+    keyed.count()
     cands = _band_candidate_pairs(keyed, id_col)
 
     if verify == "vectorized":
@@ -531,8 +518,7 @@ def minhash_lsh_pairs(
     ).persist()
     # Eager fill: both pair joins scan this cache inside one query; a lazy
     # fill lets the two scans race and re-run the tokenize kernel per side.
-    if _EAGER:
-        toks_all.count()
+    toks_all.count()
     vocab = None if verify == "vectorized" else _small_vocab_from_toks(toks_all)
     if vocab is not None:
         # Verify with dictionary-encoded bitmasks (see jaccard_pairs): two
@@ -1024,8 +1010,7 @@ def duplicated_span_stats(
         .distinct()
         .persist()
     )
-    if _EAGER:
-        pairs.count()
+    pairs.count()
     dup = (
         pairs.groupBy("_wh")
         .agg(F.count(F.lit(1)).alias("_nd"))
@@ -1083,8 +1068,7 @@ def cross_split_contamination(
         .distinct()
         .persist()
     )
-    if _EAGER:
-        pairs.count()
+    pairs.count()
     train_spans = (
         pairs.filter(F.col("_split") == train_value).select("_wh").distinct()
     )
@@ -1204,8 +1188,7 @@ def lsh_recall_audit(
         .select(F.col(id_col), "_toks")
         .persist()
     )
-    if _EAGER:
-        toks_df.count()
+    toks_df.count()
     vocab = _small_vocab_from_toks(toks_df, skip_sample=True)
     if vocab is not None:
         # Fused small-vocabulary path: ONE persisted frame carries the
@@ -1229,8 +1212,7 @@ def lsh_recall_audit(
             )
             .persist()
         )
-        if _EAGER:
-            keyed.count()
+        keyed.count()
         m_i = keyed.select(F.col(id_col).alias("i"), F.col("_mask").alias("_mi"))
         m_j = keyed.select(F.col(id_col).alias("j"), F.col("_mask").alias("_mj"))
         truth = (
@@ -1421,8 +1403,7 @@ def update_dedup_index(
     # same persist + concurrent-write shape as build_dedup_index: the two
     # appends otherwise each recompute the delta's upstream join/tokenize
     src = new_docs.persist()
-    if eager_enabled():
-        src.count()
+    src.count()
     try:
         digest, exploded = _index_frames(src, text_col, id_col)
         from concurrent.futures import ThreadPoolExecutor

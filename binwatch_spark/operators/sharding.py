@@ -6,20 +6,19 @@ rendered key-template, falling back to the 8 little-endian bytes of the binlog
 position (blsenderwork.go:135-141). Go's ``hash/fnv`` 64-bit parameters:
 offset basis 14695981039346656037, prime 1099511628211.
 
-Spark's own hash partitioning is Murmur3; FNV parity matters only when shard
-ids must agree with the reference across systems (q08, property tests). We
-implement it as a *vectorized* Pandas UDF over numpy uint64 — Arrow-batched,
-~100× faster than a row-at-a-time Python UDF, and the only Python in the hot
-path. For production routing inside Spark, `repartition(N, key)` (Murmur3) is
-the idiomatic choice and needs no UDF at all.
+The relay applies the rule per row in its sender (pipeline._RouteSender),
+with the scalar ``fnv1a64_bytes`` over the rendered key or the position
+bytes, so the relay's Spark plan has no Python UDF. The column UDFs below
+are for queries over position columns (q08, q103, property tests): a
+*vectorized* Pandas UDF over numpy uint64 — Arrow-batched, ~100× faster
+than a row-at-a-time Python UDF. Spark's own hash partitioning is Murmur3;
+FNV parity matters only when shard ids must agree with the reference.
 """
 
 from __future__ import annotations
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import Column
-from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 from pyspark.sql.types import LongType
 
@@ -47,7 +46,7 @@ def _fnv1a64_u64_le8(values: np.ndarray) -> np.ndarray:
 
 def fnv1a64_bytes(data: bytes) -> int:
     """Scalar FNV-1a64 over arbitrary bytes (Go hash/fnv semantics) —
-    used for key-template keys and unit-test vectors."""
+    the relay sender's shard hash, and unit-test vectors."""
     h = FNV_OFFSET_BASIS
     for b in data:
         h = ((h ^ b) * FNV_PRIME) & 0xFFFFFFFFFFFFFFFF
@@ -59,7 +58,7 @@ def fnv1a64_position(pos: pd.Series) -> pd.Series:
     """Column UDF: FNV-1a64 of the 8 LE bytes of a bigint position.
 
     Returns the hash reinterpreted as signed int64 (two's complement); use
-    ``shard_id`` for the unsigned ``% count`` the reference applies.
+    ``make_shard_udf`` for the unsigned ``% count`` the reference applies.
     """
     v = pos.to_numpy(dtype=np.int64).view(np.uint64)
     return pd.Series(_fnv1a64_u64_le8(v).view(np.int64))
@@ -76,38 +75,3 @@ def make_shard_udf(count: int):
         return pd.Series((_fnv1a64_u64_le8(v) % u_count).view(np.int64))
 
     return shard_of_position
-
-
-def make_shard_key_udf(count: int):
-    """Shard assignment over a *string* key (the rendered key-template path,
-    blsenderwork.go:131-134): FNV-1a64 of the UTF-8 bytes, unsigned % count."""
-    u_count = int(count)
-
-    @pandas_udf(LongType())
-    def shard_of_key(key: pd.Series) -> pd.Series:
-        # Nulls map to None, not an exception: Spark evaluates extracted
-        # pandas-UDF branches of a when/otherwise unconditionally, so a null
-        # key (e.g. the key-template error fallback in pipeline._shard_filter)
-        # must not abort the batch — the when() then selects the position
-        # fallback, mirroring the reference (blsenderwork.go:135-147).
-        out: list[int | None] = []
-        for s in key:
-            if s is None or (isinstance(s, float) and pd.isna(s)):
-                out.append(None)
-                continue
-            h = fnv1a64_bytes(s.encode("utf-8") if isinstance(s, str) else bytes(s))
-            out.append(int(np.int64(np.uint64(h % u_count))))
-        return pd.Series(out, dtype="Int64")
-
-    return shard_of_key
-
-
-def shard_id(pos: Column, count: int) -> Column:
-    """Column expression for the reference's shard id of a position."""
-    return make_shard_udf(count)(pos)
-
-
-def shard_filter(pos: Column, count: int, index: int) -> Column:
-    """``shouldProcess`` predicate (blsenderwork.go:126-149): this instance
-    handles the event iff hash % count == index."""
-    return shard_id(pos, count) == F.lit(index)

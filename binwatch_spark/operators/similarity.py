@@ -653,7 +653,6 @@ def kmeans_lloyd_rounds(
     """
     import numpy as np
 
-    from binwatch_spark.operators.dedup import eager_enabled
     from binwatch_spark.tables import spread
 
     # NULL embeddings are excluded (the schema admits them; a null row
@@ -664,8 +663,8 @@ def kmeans_lloyd_rounds(
         F.transform(F.col(vec_col), lambda v: v.cast("double")).alias("_e"),
     )
     e = e.persist()
-    if eager_enabled():  # eager fill: every round's kernel pass reads it
-        e.count()
+    # eager fill: every round's kernel pass reads it
+    e.count()
 
     def assign_with(cent_rows: list) -> DataFrame:
         # cent_rows sorted by cent_id so argmin's first-minimum rule IS

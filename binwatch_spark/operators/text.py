@@ -207,10 +207,8 @@ def bigram_lm_scores(
         .select(F.col(id_col), F.col("_p.w1").alias("w1"), F.col("_p.bg").alias("bg"))
         .persist()
     )
-    from binwatch_spark.operators.dedup import eager_enabled
-
-    if eager_enabled():  # three consumers below share one tokenization
-        bi.count()
+    # three consumers below share one tokenization
+    bi.count()
     c_bg = bi.groupBy("bg").agg(F.count(F.lit(1)).alias("c_bg"))
     c_w = bi.groupBy("w1").agg(F.count(F.lit(1)).alias("c_w"))
     v = df.select(F.explode(toks).alias("tok")).agg(

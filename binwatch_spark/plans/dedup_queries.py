@@ -784,8 +784,8 @@ def q96_dedup_drop_list(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("doc_id") != F.col("keeper_doc_id"))
         .select("doc_id", "keeper_doc_id")
     ).persist()
-    if dedup.eager_enabled():  # two consumers: the union + the anti-join
-        exact_drop.count()
+    # two consumers: the union + the anti-join
+    exact_drop.count()
     cc = dedup.connected_components(
         dedup.jaccard_pairs(
             docs, "text", "doc_id", "source", JACCARD_THRESHOLD
@@ -910,8 +910,8 @@ def q106_keep_best_drop_list(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("doc_id", F.col("_keeper").alias("keeper_doc_id"))
         .persist()
     )
-    if dedup.eager_enabled():  # two consumers: the union + the anti-join
-        exact_drop.count()
+    # two consumers: the union + the anti-join
+    exact_drop.count()
     cc = dedup.connected_components(
         dedup.jaccard_pairs(
             docs, "text", "doc_id", "source", JACCARD_THRESHOLD
@@ -1073,8 +1073,7 @@ def q107_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("doc_id", "_toks")
         .persist()
     )
-    if dedup.eager_enabled():
-        toks_df.count()
+    toks_df.count()
     vocab = dedup._small_vocab_from_toks(toks_df)
     if vocab is not None:
         sets = toks_df.select(

@@ -444,10 +444,8 @@ def q95_curation_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
         "source",
         F.size(tokens(F.col("text"))).cast("bigint").alias("n_words"),
     ).persist()
-    from binwatch_spark.operators.dedup import eager_enabled
-
-    if eager_enabled():  # two consumers: the digest groupBy + the semi-join
-        keep.count()
+    # two consumers: the digest groupBy + the semi-join
+    keep.count()
     keepers = (
         keep.groupBy(F.sha2(F.col("text"), 256).alias("_dig"))
         .agg(F.min("doc_id").alias("doc_id"))
@@ -1394,16 +1392,16 @@ def q131_full_curation(spark: SparkSession, sf_dir: str) -> DataFrame:
     qkeep = docs.join(passing, "doc_id", "left_semi").select(
         "doc_id", "text", "source"
     ).persist()
-    if dedup.eager_enabled():  # two consumers: digest groupBy + semi-join
-        qkeep.count()
+    # two consumers: digest groupBy + semi-join
+    qkeep.count()
     ex_keepers = (
         qkeep.groupBy(F.sha2(F.col("text"), 256).alias("_dig"))
         .agg(F.min("doc_id").alias("doc_id"))
         .select("doc_id")
     )
     ekeep = qkeep.join(ex_keepers, "doc_id", "left_semi").persist()
-    if dedup.eager_enabled():  # two consumers: pair stage + anti-join
-        ekeep.count()
+    # two consumers: pair stage + anti-join
+    ekeep.count()
     cc = dedup.connected_components(
         dedup.jaccard_pairs(
             ekeep, "text", "doc_id", "source", JACCARD_THRESHOLD

@@ -841,8 +841,6 @@ def q105_cms_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
         make_polyhash_udf,
     )
 
-    from binwatch_spark.operators.dedup import eager_enabled
-
     docs = load(spark, sf_dir, "documents")
     ph = make_polyhash_udf()
     toks = docs.select(
@@ -853,8 +851,7 @@ def q105_cms_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
     # hash kernel run once, not per consumer; eager fill so concurrent
     # stages don't race to populate the cache.
     hashed = toks.select("tok", ph(F.col("tok")).alias("_h")).persist()
-    if eager_enabled():
-        hashed.count()
+    hashed.count()
 
     def cell(j: int) -> Column:
         return (

@@ -727,10 +727,7 @@ def q83_token_commonness(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .persist()
     )
-    from binwatch_spark.operators.dedup import eager_enabled
-
-    if eager_enabled():
-        toks.count()
+    toks.count()
     counts = toks.groupBy("_th").agg(F.count(F.lit(1)).alias("_c"))
     total = counts.agg(F.sum("_c").alias("_n"))
     per_doc = (
@@ -977,13 +974,11 @@ def q113_source_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     toks = docs.select(
         "source", F.explode(F.split(F.lower(F.col("text")), " ")).alias("tok")
     )
-    from binwatch_spark.operators.dedup import eager_enabled
 
     # THREE consumers (per-source totals, corpus totals, the term join)
     sc = toks.groupBy("source", "tok").agg(F.count(F.lit(1)).alias("c"))
     sc = sc.persist()
-    if eager_enabled():
-        sc.count()
+    sc.count()
     st = sc.groupBy("source").agg(F.sum("c").alias("ns"))
     corpus = sc.groupBy("tok").agg(F.sum("c").alias("d"))
     total = corpus.agg(F.sum("d").alias("n"))

@@ -8,13 +8,15 @@ Topology parity with the reference (binwatch.go:118-144, SURVEY §3.2):
       → operation decode (F2)             column expressions (cdc.py)
       → itemByRow explode (P3)
       → item sequencing (Q1)              row_number per micro-batch
-      → shard filter (R1)                 FNV-1a64 UDF (sharding.py)
-      → per route: predicate (R2),        foreachBatch, one pass: one flag
-        template render (T1),               column per route → keep rows any
-        connector send (K1/K2)              route matches → one sender walks
-                                            the routes per row (driver for
-                                            senderWorkers=1, else
-                                            foreachPartition)
+      → per route: predicate (R2)         foreachBatch, one pass: one flag
+                                            column per route → keep rows any
+                                            route matches (no Python UDF in
+                                            the plan)
+      → shard check (R1),                 one sender per process (driver for
+        template render (T1),               senderWorkers=1, else
+        connector send (K1/K2)              foreachPartition) hashes each
+                                            row's key (FNV-1a64) and walks
+                                            the routes for the rows it keeps
       → checkpoint commit (C1)            streaming offset log, per batch
 
 Semantics preserved: at-least-once (send happens inside the batch, the
@@ -35,21 +37,15 @@ from dataclasses import dataclass
 from functools import reduce
 from typing import Callable
 
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from binwatch_spark.config import ConfigError, JobConfig
+from binwatch_spark.config import ConfigError, JobConfig, ShardingConfig
 from binwatch_spark.operators import cdc
-from binwatch_spark.operators.sharding import make_shard_key_udf, make_shard_udf
+from binwatch_spark.operators.sharding import fnv1a64_bytes
 from binwatch_spark.sinks.connectors import make_connector
 from binwatch_spark.sources.envelope import read_envelope_stream
-from binwatch_spark.streaming.templates import (
-    compile_template,
-    item_from_row,
-    native_key_expr,
-    template_needs_rows,
-)
+from binwatch_spark.streaming.templates import compile_template, item_from_row
 
 
 @dataclass
@@ -222,68 +218,30 @@ def _sequence_batch(batch_df: DataFrame, workers: int = 1) -> DataFrame:
     )
 
 
-def _shard_filter(df: DataFrame, cfg: JobConfig) -> DataFrame:
-    """R1 (blsenderwork.go:126-149): key template if set, else position."""
-    if not cfg.sharding.enabled or cfg.sharding.count <= 1:
-        return df
-    count, index = cfg.sharding.count, cfg.sharding.index
-    if cfg.sharding.key_template:
-        template = cfg.sharding.key_template
-        # Fast path: the documented key-template shapes compile straight to
-        # a column expression (templates.native_key_expr) — no to_json, no
-        # per-row Python render; the only Python left in R1 is the FNV hash
-        # UDF itself. The pandas renderer remains the general fallback.
-        key = native_key_expr(template)
-        if key is None:
-
-            @F.pandas_udf("string")
-            def render_key(rows_json: pd.Series) -> pd.Series:
-                import json as _json
-
-                render = compile_template(template)
-                out = []
-                for payload in rows_json:
-                    row = _json.loads(payload)
-                    try:
-                        out.append(render(item_from_row(row, row.get("item_id", 0))))
-                    except Exception:
-                        out.append(None)  # template error → position fallback
-                return pd.Series(out)
-
-            # Narrow the serialized struct: rows is the fat column (the
-            # whole payload); templates that provably never reach
-            # .Data.Rows (field-reference analysis — `.`/`.Data` count as
-            # reaching it) render from the envelope scalars alone, so
-            # don't JSON-encode the payload per row just to throw it away
-            # (VERDICT r03). Ambiguity errs toward serializing.
-            if template_needs_rows(template):
-                struct_cols = F.struct("*")
-            else:
-                slim = [c for c in df.columns if c != "rows"]
-                struct_cols = F.struct(*slim)
-            key = render_key(F.to_json(struct_cols))
-        by_key = make_shard_key_udf(count)(key)
-        by_pos = make_shard_udf(count)(F.col("binlog_position"))
-        # blsenderwork.go:135-141: template failure falls back to position,
-        # deterministically across replicas.
-        shard = F.when(key.isNotNull(), by_key).otherwise(by_pos)
-    else:
-        shard = make_shard_udf(count)(F.col("binlog_position"))
-    return df.filter(shard == F.lit(index))
-
-
 def _route_flag(i: int) -> str:
     return f"__route_{i}"
 
 
-class _RouteSender:
-    """R3→T1→K1 for one process: each row is tested against every route in
-    declared order (blsenderwork.go:182-199), rendered and sent to each
-    route whose predicate matched. Templates compile once and connectors
-    open lazily once per connector name, so a sender holds one connection
-    per connector for its whole life."""
+def _item(row) -> dict:
+    # a fresh item per use: sprig's set/unset/merge mutate it
+    d = row.asDict(recursive=True)
+    return item_from_row(d, d["item_id"])
 
-    def __init__(self, routes: list[CompiledRoute], connector_cfgs: dict):
+
+class _RouteSender:
+    """R1→R3→T1→K1 for one process: each row is checked for shard
+    membership, then tested against every route in declared order
+    (blsenderwork.go:182-199), rendered and sent to each route whose
+    predicate matched. Templates compile once and connectors open lazily
+    once per connector name, so a sender holds one connection per
+    connector for its whole life."""
+
+    def __init__(
+        self,
+        routes: list[CompiledRoute],
+        connector_cfgs: dict,
+        sharding: ShardingConfig,
+    ):
         self._routes = [
             (
                 _route_flag(i),
@@ -296,15 +254,39 @@ class _RouteSender:
         ]
         self._connector_cfgs = connector_cfgs
         self._connectors: dict = {}
+        self._shard = None  # (key renderer or None, count, index) when sharding
+        if sharding.enabled and sharding.count > 1:
+            render_key = (
+                compile_template(sharding.key_template)
+                if sharding.key_template
+                else None
+            )
+            self._shard = (render_key, sharding.count, sharding.index)
+
+    def _in_shard(self, row) -> bool:
+        """R1 (blsenderwork.go:126-149): FNV-1a64 of the rendered key
+        template, or of the binlog position's 8 little-endian bytes when
+        there is no key template or rendering raises; the row is this
+        instance's iff ``hash % count == index``."""
+        render_key, count, index = self._shard
+        key = None
+        if render_key is not None:
+            try:
+                key = render_key(_item(row)).encode("utf-8")
+            except Exception:  # any render error: position (blsenderwork.go:135-141)
+                pass
+        if key is None:
+            key = (row["binlog_position"] & 0xFFFFFFFFFFFFFFFF).to_bytes(8, "little")
+        return fnv1a64_bytes(key) % count == index
 
     def send(self, rows: Iterable) -> None:
         for row in rows:
+            if self._shard is not None and not self._in_shard(row):
+                continue
             for flag, connector_name, render in self._routes:
                 if not row[flag]:
                     continue
-                # a fresh item per route: sprig's set/unset/merge mutate it
-                d = row.asDict(recursive=True)
-                item = item_from_row(d, d["item_id"])
+                item = _item(row)
                 if render is not None:
                     payload = render(item)
                 else:
@@ -324,11 +306,12 @@ class _RouteSender:
 
 
 def _route_rows(
-    batch_df: DataFrame, cfg: JobConfig, routes: list[CompiledRoute], workers: int
+    batch_df: DataFrame, routes: list[CompiledRoute], workers: int
 ) -> DataFrame:
-    """Q1 + R1 + R2 as one plan: sequence and shard-filter the batch, add
-    one boolean column per route predicate (``_route_flag(i)``) and keep
-    the rows at least one route matches."""
+    """Q1 + R2 as one plan: sequence the batch, add one boolean column per
+    route predicate (``_route_flag(i)``) and keep the rows at least one
+    route matches. Shard membership (R1) is the sender's check, so the plan
+    has no Python UDF."""
     flags = [
         F.coalesce(
             cdc.route_predicate(
@@ -344,19 +327,18 @@ def _route_rows(
     any_route = reduce(
         operator.or_, [F.col(_route_flag(i)) for i in range(len(routes))], F.lit(False)
     )
-    batch_df = _shard_filter(_sequence_batch(batch_df, workers), cfg)
-    return batch_df.select("*", *flags).filter(any_route)
+    return _sequence_batch(batch_df, workers).select("*", *flags).filter(any_route)
 
 
 def make_batch_processor(
     cfg: JobConfig, routes: list[CompiledRoute] | None = None
 ) -> Callable[[DataFrame, int], None]:
-    """The R2→T1→K1 stage as a foreachBatch function, one Spark action per
-    trigger: the batch is sequenced and shard-filtered once, each route's
-    predicate becomes a boolean column, rows no route matches are dropped,
-    and a single sender walks the routes for every row. ``routes``
-    restricts the processor to a subset — the per-route-query topology
-    (run_routes_concurrent) passes exactly one.
+    """The R1→R2→T1→K1 stage as a foreachBatch function, one Spark action
+    per trigger: the batch is sequenced once, each route's predicate
+    becomes a boolean column, rows no route matches are dropped, and a
+    single sender checks each row's shard and walks the routes for it.
+    ``routes`` restricts the processor to a subset — the per-route-query
+    topology (run_routes_concurrent) passes exactly one.
 
     senderWorkers == 1 sends from the driver through ``toLocalIterator``:
     _sequence_batch's global window already leaves the batch sorted in one
@@ -369,17 +351,19 @@ def make_batch_processor(
         routes = compile_routes(cfg)
     connector_cfgs = {c.name: c for c in cfg.connectors}
     workers = max(1, cfg.server.sender_workers)
-    driver_sender = _RouteSender(routes, connector_cfgs) if workers == 1 else None
+    driver_sender = (
+        _RouteSender(routes, connector_cfgs, cfg.sharding) if workers == 1 else None
+    )
 
     def send_partition(rows) -> None:
-        sender = _RouteSender(routes, connector_cfgs)
+        sender = _RouteSender(routes, connector_cfgs, cfg.sharding)
         try:
             sender.send(rows)
         finally:
             sender.close()
 
     def process_batch(batch_df: DataFrame, batch_id: int) -> None:
-        matched = _route_rows(batch_df, cfg, routes, workers)
+        matched = _route_rows(batch_df, routes, workers)
         if driver_sender is not None:
             driver_sender.send(matched.toLocalIterator())
         else:

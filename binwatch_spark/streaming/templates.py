@@ -48,9 +48,10 @@ rendering wrong beats rendering silently, and compile_routes runs at build
 time (blsenderwork.go:102-105 parity), so a bad template kills the job
 before any event flows.
 
-``native_key_expr`` additionally compiles the documented shard-key shapes
-straight to a Spark column expression so the hot path has no Python at all
-(see pipeline._shard_filter).
+The same renderer computes the shard key (R1): the relay's sender renders
+``sharding.keyTemplate`` on each row's item before it walks the routes
+(pipeline._RouteSender), so the key and the payloads share one template
+engine and the relay's Spark plan has no Python UDF.
 """
 
 from __future__ import annotations
@@ -1808,96 +1809,6 @@ def compile_template(template: str, seeded_random: bool = False):
                 _set_rng(prev_rng)
 
     return render
-
-
-# Item fields that map 1:1 onto envelope columns (item_from_row below);
-# used by native_key_expr to compile key templates to column expressions.
-_NATIVE_FIELDS = {
-    ".ItemID": "item_id",
-    ".Log.EventType": "event_type",
-    ".Log.BinlogFile": "binlog_file",
-    ".Log.BinlogPosition": "binlog_position",
-    ".Data.Database": "database",
-    ".Data.Table": "table",
-    ".Data.Operation": "operation",
-}
-
-
-def native_key_expr(template: str):
-    """Compile a shard-key template to a pure Spark column expression, or
-    return None when the template needs the general renderer.
-
-    The documented key-template shape ``{{ (index .Data.Rows 0).col }}``
-    (docs/binwatch.v1alpha2.yaml:69-75) and plain dotted fields become
-    ``rows[0]['col']`` / column refs stitched with concat — no Python eval
-    node in the plan, so the R1 filter stays in whole-stage codegen right up
-    to the FNV hash itself. Null/missing semantics match the renderer's
-    error fallback: a missing map key or out-of-range row index yields NULL
-    (concat propagates it), and pipeline._shard_filter's when() then selects
-    the position-hash fallback, exactly as a render exception would.
-    """
-    from pyspark.sql import functions as F
-
-    exprs: list[Any] = []  # literal str | Column
-    pos = 0
-    for m in _EXPR_RE.finditer(template):
-        lit = template[pos : m.start()]
-        if m.group(0).startswith("{{-"):
-            lit = lit.rstrip()
-        # rtrim of the FOLLOWING literal is applied when that literal lands
-        if exprs and isinstance(exprs[-1], tuple) and exprs[-1] == ("rtrim",):
-            exprs.pop()
-            lit = lit.lstrip()
-        if lit:
-            exprs.append(lit)
-        body = m.group(1)
-        if "|" in body:
-            return None  # pipes → general renderer
-        idx = _INDEX_RE.match(body)
-        if idx:
-            if idx.group(1) != ".Data.Rows":
-                return None
-            # get/try_element_at, not [] — ANSI mode (Spark 4 default) makes
-            # [] raise on out-of-range/missing; the renderer's error contract
-            # here is NULL → position fallback.
-            col = F.try_element_at(
-                F.get(F.col("rows"), F.lit(int(idx.group(2)))),
-                F.lit(idx.group(3)),
-            )
-        elif body in _NATIVE_FIELDS:
-            col = F.col(_NATIVE_FIELDS[body]).cast("string")
-        else:
-            return None
-        exprs.append(col)
-        pos = m.end()
-        if m.group(0).endswith("-}}"):
-            exprs.append(("rtrim",))
-    tail = template[pos:]
-    if exprs and isinstance(exprs[-1], tuple) and exprs[-1] == ("rtrim",):
-        exprs.pop()
-        tail = tail.lstrip()
-    if tail:
-        exprs.append(tail)
-    if not any(not isinstance(p, str) for p in exprs):
-        return None  # constant template — let the renderer handle it
-    cols = [F.lit(p) if isinstance(p, str) else p for p in exprs]
-    return cols[0] if len(cols) == 1 else F.concat(*cols)
-
-
-def template_needs_rows(template: str) -> bool:
-    """True unless every field reference in the template provably avoids
-    ``.Data.Rows`` — used by the fallback shard-key renderer to decide
-    whether the (fat) payload column must be serialized. ``.`` and
-    ``.Data`` reach Rows indirectly, so they count as needing it; any
-    ambiguity errs toward True (serialize), never toward dropping data a
-    template could read."""
-    for m in _EXPR_RE.finditer(template):
-        for ref in re.findall(
-            r"(?<![\w\"'])\.(?:[A-Za-z_][A-Za-z0-9_.]*)?", m.group(1)
-        ):
-            if ref in (".", ".Data") or ref.startswith(".Data.Rows"):
-                return True
-    return False
 
 
 def item_from_row(row: dict, item_id: int) -> dict:

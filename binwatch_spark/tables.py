@@ -11,6 +11,7 @@ keyed by (path, mtime) so regenerated fixtures invalidate (see _DF_CACHE).
 from __future__ import annotations
 
 import os
+import re
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -41,7 +42,8 @@ DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 # entry if a fixture dir is regenerated mid-process.
 _SCHEMA_CACHE: dict = {}
 
-# Lazy-plan HANDLE cache keyed by (applicationId, absolute path, mtime):
+# Lazy-plan HANDLE cache keyed by (applicationId, session, absolute path,
+# mtime):
 # even with the schema supplied, building the reader + analyzing the scan
 # costs ~15-20 ms of driver py4j per load() call (~700 calls/sweep). A
 # DataFrame is an immutable lazy plan — handing the SAME handle back is
@@ -50,7 +52,10 @@ _SCHEMA_CACHE: dict = {}
 # recompute from disk on every invocation — verified by the mtime key: a
 # regenerated fixture invalidates the entry). applicationId scopes entries
 # to the owning SparkContext so a stop()/restart never resurrects a handle
-# bound to a dead JVM session.
+# bound to a dead JVM session; id(spark) scopes them to the session, so a
+# ``spark.newSession()`` caller gets a frame bound to its own confs (the id
+# cannot be reused while the entry lives: the cached DataFrame holds a
+# reference to its session).
 _DF_CACHE: dict = {}
 
 
@@ -63,7 +68,7 @@ def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     except OSError:
         key = None
     if key is not None:
-        df_key = (spark.sparkContext.applicationId, *key)
+        df_key = (spark.sparkContext.applicationId, id(spark), *key)
         cached = _DF_CACHE.get(df_key)
         if cached is not None:
             return cached
@@ -125,7 +130,8 @@ def local_frame(spark: SparkSession, rows, schema: str) -> DataFrame:
         return spark.createDataFrame(rows, schema)
     import pandas as pd
 
-    names = [c.strip().split()[0] for c in schema.split(",")]
+    # split on commas outside parentheses: "amount decimal(10,2)" is one field
+    names = [c.strip().split()[0] for c in re.split(r",(?![^(]*\))", schema)]
     pdf = pd.DataFrame([tuple(r) for r in rows], columns=names)
     return spark.createDataFrame(pdf, schema=schema)
 

@@ -201,83 +201,40 @@ def test_binlog_datasource_replay(spark, tmp_path):
     assert rows == sorted((f, p, op) for f, p, _, _, op, _ in EVENTS)
 
 
-def test_native_key_expr_matches_renderer(spark):
-    """The documented key-template shapes compile to pure column
-    expressions whose values match the general renderer row-for-row."""
-    from binwatch_spark.streaming.templates import (
-        compile_template,
-        item_from_row,
-        native_key_expr,
+def test_route_rows_plan_has_no_python_udf(spark, tmp_path):
+    """Plan shape: shard membership is the sender's check, so the relay's
+    per-trigger plan has no Python UDF and no to_json, whatever the
+    sharding config (documented key, piped key, no key)."""
+    from binwatch_spark.sources.envelope import read_envelope_batch
+    from binwatch_spark.streaming.pipeline import (
+        _route_rows,
+        compile_routes,
+        envelope_transform,
     )
-    import pyspark.sql.functions as F
-
-    rows = [
-        {
-            "event_type": EVENT_TYPE[op],
-            "binlog_file": f,
-            "binlog_position": p,
-            "database": db,
-            "table": tbl,
-            "operation": op,
-            "rows": rws,
-            "item_id": i + 1,
-        }
-        for i, (f, p, db, tbl, op, rws) in enumerate(EVENTS)
-    ]
-    df = spark.createDataFrame(
-        rows,
-        "event_type string, binlog_file string, binlog_position bigint,"
-        " database string, table string, operation string,"
-        " rows array<map<string,string>>, item_id bigint",
-    )
-    for template in (
-        "{{ (index .Data.Rows 0).id }}",
-        "{{ .Data.Database }}.{{ .Data.Table }}",
-        "{{ .Log.BinlogFile }}/{{ .Log.BinlogPosition }}",
-        "k-{{ .ItemID }}",
-    ):
-        col = native_key_expr(template)
-        assert col is not None, template
-        got = [r["k"] for r in df.select(col.alias("k")).orderBy("item_id").collect()]
-        render = compile_template(template)
-        want = [render(item_from_row(r, r["item_id"])) for r in rows]
-        assert got == want, template
-    # out-of-range row index → NULL (renderer raises → fallback; same branch)
-    col = native_key_expr("{{ (index .Data.Rows 5).id }}")
-    assert df.select(col.alias("k")).first()["k"] is None
-    # pipes and unknown fields need the general renderer
-    assert native_key_expr("{{ .Data.Rows | toJson }}") is None
-    assert native_key_expr("{{ .Data.Custom }}") is None
-    assert native_key_expr("constant-only") is None
-
-
-def test_key_template_shard_plan_has_no_render_udf(spark, tmp_path):
-    """Plan-shape: the documented key template must not put a to_json/
-    render stage in the plan — only the FNV shard UDF remains."""
-    from binwatch_spark.streaming.pipeline import _shard_filter
 
     tmp = str(tmp_path)
     write_replay(f"{tmp}/replay", EVENTS)
-    doc = make_cfg(
-        tmp,
-        sharding={
-            "enabled": True,
-            "count": 2,
-            "index": 0,
-            "keyTemplate": "{{ (index .Data.Rows 0).id }}",
-        },
-    )
-    cfg = parse(doc)
-    df = spark.createDataFrame(
-        [("mysql-bin.000001", 100, "testdb", "users", "INSERT",
-          [{"id": "1"}], 1)],
-        "binlog_file string, binlog_position bigint, database string,"
-        " table string, operation string, rows array<map<string,string>>,"
-        " item_id bigint",
-    )
-    plan = _shard_filter(df, cfg)._jdf.queryExecution().analyzed().toString()
-    assert "to_json" not in plan
-    assert "render_key" not in plan
+    for key_template in (
+        "{{ (index .Data.Rows 0).id }}",
+        "{{ .Data.Table | upper }}",
+        "",
+    ):
+        doc = make_cfg(
+            tmp,
+            sharding={
+                "enabled": True,
+                "count": 2,
+                "index": 0,
+                "keyTemplate": key_template,
+            },
+        )
+        cfg = parse(doc)
+        batch = envelope_transform(read_envelope_batch(spark, f"{tmp}/replay"), cfg)
+        for workers in (1, 2):
+            qe = _route_rows(batch, compile_routes(cfg), workers)._jdf.queryExecution()
+            plan = qe.analyzed().toString() + qe.executedPlan().toString()
+            for node in ("ArrowEvalPython", "BatchEvalPython", "to_json"):
+                assert node not in plan, (key_template, workers, node)
 
 
 class _FlakyWebhook:
@@ -1146,7 +1103,7 @@ def test_single_pass_fan_out_order_and_redelivery(spark, tmp_path):
         batch = envelope_transform(read_envelope_batch(spark, f"{tmp}/replay"), cfg)
         buf = io.StringIO()
         with contextlib.redirect_stdout(buf):
-            _route_rows(batch, cfg, compile_routes(cfg), workers=1).explain()
+            _route_rows(batch, compile_routes(cfg), workers=1).explain()
         assert buf.getvalue().count(" Sort [") == 1
 
         run_supervised(spark, cfg, available_now=True, max_restarts=3)

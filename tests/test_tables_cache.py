@@ -66,3 +66,22 @@ def test_df_handle_reused_within_app(spark):
     a = load(spark, SF_SMALL, "nation")
     b = load(spark, SF_SMALL, "nation")
     assert a is b
+
+
+def test_df_handle_scoped_to_session(spark):
+    # a newSession() caller gets a frame bound to its own session (and its
+    # confs), not the handle cached for the first session
+    s2 = spark.newSession()
+    assert load(s2, SF_SMALL, "nation").sparkSession is s2
+    assert load(spark, SF_SMALL, "nation").sparkSession is spark
+
+
+def test_local_frame_parenthesised_types(spark):
+    # the comma inside decimal(10,2) does not split the field list
+    from decimal import Decimal
+
+    df = tables.local_frame(
+        spark, [(1, Decimal("12.34"))], "id bigint, amount decimal(10,2)"
+    )
+    assert df.dtypes == [("id", "bigint"), ("amount", "decimal(10,2)")]
+    assert df.collect()[0]["amount"] == Decimal("12.34")

@@ -385,13 +385,12 @@ def test_template_random_family_still_fails_fast():
 
 def test_example_config_parses_and_compiles(spark, monkeypatch):
     """docs/example-config.yaml must stay loadable: parse, validation,
-    route-template compilation, and the shard key template's native
-    compilation all succeed."""
+    route-template compilation, and the shard key template's compilation
+    all succeed."""
     import os
 
     from binwatch_spark.config import load
     from binwatch_spark.streaming.pipeline import compile_routes
-    from binwatch_spark.streaming.templates import native_key_expr
 
     monkeypatch.setenv("BINWATCH_DB_PASSWORD", "pw1")
     monkeypatch.setenv("BINWATCH_WEBHOOK_PASSWORD", "pw2")
@@ -402,8 +401,8 @@ def test_example_config_parses_and_compiles(spark, monkeypatch):
     assert cfg.source.allowlist == ["shop.users", "shop.orders"]
     routes = compile_routes(cfg)
     assert [r.name for r in routes] == ["users-to-api", "everything-to-topic"]
-    # the documented key shape compiles to a pure column expression
-    assert native_key_expr(cfg.sharding.key_template) is not None
+    # the documented key shape renders the first row's id
+    assert compile_template(cfg.sharding.key_template)(ITEM) == "7"
 
 
 def test_template_go_div_mod_truncate_toward_zero():
@@ -445,20 +444,6 @@ def test_template_now_has_utc_offset():
 def test_template_totoml_rejects_dict_in_array():
     with pytest.raises(ValueError, match="array"):
         compile_template('{{ toToml (dict "a" (list (dict "k" 1))) }}')(ITEM)
-
-
-def test_template_needs_rows_analysis():
-    from binwatch_spark.streaming.templates import template_needs_rows
-
-    # direct, indirect, and whole-item references all need rows
-    assert template_needs_rows("{{ (index .Data.Rows 0).id }}")
-    assert template_needs_rows("{{ .Data.Rows | toJson }}")
-    assert template_needs_rows("{{ .Data | toJson }}")
-    assert template_needs_rows("{{ . | toJson }}")
-    assert template_needs_rows('{{ index .Data "Rows" }}')
-    # scalar-only templates provably don't
-    assert not template_needs_rows("{{ .Data.Table | upper }}")
-    assert not template_needs_rows("{{ .Log.BinlogFile }}/{{ .ItemID }}")
 
 
 def test_template_atoi_strconv_strictness():
