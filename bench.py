@@ -215,7 +215,7 @@ def main() -> None:
     total = round(sum(timings.values()), 2)
     # The driver records the tail of stdout and parses the last JSON line;
     # with ~70 queries a pretty-printed line overflows the tail window and
-    # truncates at the FRONT (BENCH_r02 arrived with parsed=null). Keep the
+    # truncates at the FRONT (an early record arrived with parsed=null). Keep the
     # line as short as possible (compact separators, 2-decimal per-query
     # times) and ALSO write the full-precision result to BENCH_local.json so
     # the artifact survives any capture truncation.

@@ -8,9 +8,20 @@ streaming pipeline → termination policy. A user of the reference runs
 same line with ``python -m binwatch_spark`` (or the ``binwatch-spark``
 console script) in front.
 
-Spark-specific flags (both optional, test/dev oriented):
+``sync`` makes one call, ``pipeline.run_supervised``, for both
+topologies: it starts the shared query (or, with ``--per-route``, one
+query per route) and supervises it under the reference's error policy.
+With ``restartSyncerOnError`` a failed query restarts alone from its
+checkpoint; with ``stopInError`` a terminal failure stops every query.
+Exit code: 0 when every query ended cleanly, 1 when the config is bad,
+when a query failed terminally (with or without ``stopInError``), or when
+anything else raised.
+
+Spark-specific flags (all optional):
 - ``--available-now``: drain everything currently available and exit
   (Structured Streaming availableNow trigger) instead of running forever.
+- ``--per-route``: one streaming query per route, each with its own
+  checkpoint (``pipeline.run_routes_concurrent``).
 - ``--master``: Spark master URL override (default: local[*] via
   session.get_spark, or whatever SPARK_MASTER is set to).
 """
@@ -49,57 +60,16 @@ def _sync(args: argparse.Namespace) -> int:
     spark.streams.addListener(listener)
     httpd = serve_api(cfg, listener) if args.serve_api else None
     try:
-        if args.per_route:
-            # R3 as N independent queries (run_routes_concurrent): each
-            # route has its own checkpoint and lifecycle — one route's
-            # sink outage stops only that route. Failures surface after
-            # ALL routes are awaited, so a healthy route finishes its
-            # drain even when a sibling dies mid-run.
-            from binwatch_spark.streaming.pipeline import (
-                run_routes_concurrent,
-            )
-
-            queries = run_routes_concurrent(
-                spark, cfg, available_now=args.available_now
-            )
-            failed: list[str] = []
-            if args.available_now:
-                # Bounded drain: await each route to completion — failures
-                # surface after ALL routes are awaited, so a healthy route
-                # finishes its drain even when a sibling dies mid-run.
-                for name, q in queries.items():
-                    try:
-                        q.awaitTermination()
-                    except Exception as exc:
-                        print(f"route {name} failed: {exc}", file=sys.stderr)
-                        failed.append(name)
-            else:
-                # Continuous: supervise all routes — failures surface and
-                # restart promptly instead of waiting behind the first
-                # never-terminating sibling (pipeline.supervise_routes).
-                from binwatch_spark.streaming.pipeline import (
-                    supervise_routes,
-                )
-
-                failed = supervise_routes(
-                    spark,
-                    cfg,
-                    queries,
-                    on_failure=lambda name, exc: print(
-                        f"route {name} failed: {exc}", file=sys.stderr
-                    ),
-                )
-            if failed:
-                return 1
-        else:
-            run_supervised(spark, cfg, available_now=args.available_now)
+        failed = run_supervised(
+            spark, cfg, available_now=args.available_now, per_route=args.per_route
+        )
     except Exception as exc:  # stopInError: exit non-zero like the reference
         print(f"pipeline failed: {exc}", file=sys.stderr)
         return 1
     finally:
         if httpd is not None:
             httpd.shutdown()
-    return 0
+    return 1 if failed else 0
 
 
 def _list(args: argparse.Namespace) -> int:
@@ -183,8 +153,9 @@ def build_parser() -> argparse.ArgumentParser:
         "--per-route",
         action="store_true",
         help="run each route as its own streaming query with an independent"
-        " checkpoint (one route's failure never stops the others; restart"
-        " redelivers only that route's uncommitted batch)",
+        " checkpoint; a failed route restarts alone under"
+        " restartSyncerOnError (redelivering only its uncommitted batch),"
+        " and stopInError stops every route on a terminal failure",
     )
     sync.add_argument(
         "--no-serve-api",

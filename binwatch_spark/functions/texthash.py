@@ -450,10 +450,6 @@ def make_lsh_bucket_udf(planes: list[list[float]]):
     return bucket
 
 
-def _plane_lit(j: int, table: int = 0) -> Column:
-    return F.array(*[F.lit(v) for v in HYPERPLANE_TABLES[table][j]])
-
-
 def lsh_bucket(embedding: Column | str, table: int = 0) -> Column:
     """Sign-bit bucket id of an array<float|double> embedding: bit j set iff
     dot(embedding, plane_j) >= 0. Pure zip_with/aggregate — JVM-side, and the

@@ -1,5 +1,5 @@
-"""Observability — the reference's HTTP state API (O1) and error policy (O2)
-on Spark streaming primitives.
+"""Observability — the reference's HTTP state API (O1) on Spark streaming
+primitives. The error policy (O2) is ``pipeline.supervise_routes``.
 
 - ``ProgressListener``: StreamingQueryListener capturing per-batch progress
   (rows/sec, batch duration, state) — strictly richer than the reference's
@@ -8,9 +8,6 @@ on Spark streaming primitives.
   serverapi.go:78-93) and ``GET /api/v1/server`` → ``{id, host, port,
   poolSize}`` where poolSize reports the live in-flight row count of the
   latest micro-batch (the queue-depth analog from pools.go:84-89).
-- ``stop_in_error`` policy: the reference exits the process on any logged
-  error (logger.go:83-85); in Spark a failed foreachBatch already fails the
-  query — ``await_with_policy`` converts that into exit semantics.
 """
 
 from __future__ import annotations
@@ -115,12 +112,3 @@ def serve_api(
     threading.Thread(target=httpd.serve_forever, daemon=True).start()
     return httpd
 
-
-def await_with_policy(query, cfg: JobConfig, timeout: int | None = None) -> None:
-    """stopInError parity: a query exception propagates (caller decides to
-    exit); without the flag, log-and-continue semantics are the caller's."""
-    try:
-        query.awaitTermination(timeout)
-    except Exception:
-        if cfg.server.stop_in_error:
-            raise

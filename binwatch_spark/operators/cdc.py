@@ -9,12 +9,14 @@ Reference stages covered here:
 - table allowlist filter  F1  (blreaderwork.go:247-250)
 - DML-operation decode    F2  (utils.go:74-90)
 - positional projection   P1  (blreaderwork.go:252-270)
-- before-image drop       P2  (blreaderwork.go:261-263)
-- row explode             P3  (blreaderwork.go:275-295)
 - route predicate         R2  (blsenderwork.go:183-184)
 - template render         T1  (tmpl.go:114-121)
 - monotonic sequencing    Q1  (pools.go:57-74)
 - checkpoint frontier     C1  (blsenderwork.go:204-213)
+
+The row explode P3 (blreaderwork.go:275-295) is the relay's itemByRow step
+in ``streaming/pipeline.envelope_transform``; q05 and q06 spell P3 and the
+before-image drop P2 (blreaderwork.go:261-263) in their own plans.
 """
 
 from __future__ import annotations
@@ -81,23 +83,6 @@ def route_predicate(
     if route_db_table:
         pred = pred & (db_table == F.lit(route_db_table))
     return pred
-
-
-def explode_rows(df: DataFrame, rows_col: str = "rows", out_col: str = "row") -> DataFrame:
-    """itemByRow=true: one event with N rows → N single-row events
-    (blreaderwork.go:275-295). Plain ``explode`` — Spark pipelines it without a
-    shuffle, so it scales linearly with input size.
-    """
-    return df.withColumn(out_col, F.explode(F.col(rows_col))).drop(rows_col)
-
-
-def drop_before_images(
-    df: DataFrame, rows_col: str = "rows", pos_col: str = "row_idx", out_col: str = "row"
-) -> DataFrame:
-    """MySQL UPDATE events carry (before, after) pairs; keep odd indices —
-    the after-images (blreaderwork.go:261-263)."""
-    exploded = df.select("*", F.posexplode(F.col(rows_col)).alias(pos_col, out_col))
-    return exploded.filter(F.col(pos_col) % 2 == 1).drop(rows_col)
 
 
 def render_json(*cols: Column | str) -> Column:

@@ -70,14 +70,6 @@ from binwatch_spark.tables import spread
 BAND_KEY_CAP = 100
 
 
-def exact_dedup(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
-    """Collapse exact duplicates, keeping the lowest id per text group."""
-    return df.groupBy(text_col).agg(
-        F.min(id_col).alias("keeper_" + id_col),
-        F.count(F.lit(1)).alias("dup_count"),
-    )
-
-
 def hash_dedup(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
     """Exact dedup keyed on sha2-256 of the text: at scale the shuffle moves
     32-byte digests instead of documents."""

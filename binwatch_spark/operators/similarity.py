@@ -23,8 +23,6 @@ hyperplane — the recall lever at 100 TB.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
@@ -43,7 +41,7 @@ from binwatch_spark.functions.texthash import EMBED_DIM, lsh_bucket
 # under the contract's round(6) quantization — tests/test_wide_dim.py pins
 # equality at dim 64 and oracle-exactness at dim 512/2048. Same gating
 # idiom as the LSH and driver-CC cutovers.
-WIDE_DIM_CUTOVER = int(os.environ.get("BINWATCH_WIDE_DIM_CUTOVER", "256"))
+WIDE_DIM_CUTOVER = 256
 
 
 def _dot(x: Column, y: Column) -> Column:

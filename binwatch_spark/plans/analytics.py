@@ -10,8 +10,6 @@ sides) come from plans/registry.py.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
@@ -251,9 +249,7 @@ def q57_length_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ORACLE spells the identical gate (both branches in one statement, the
 # dead branch's base CTE filtered empty by the same count), so the query
 # stays hash-exact on WHICHEVER side of the gate the data lands.
-Q42_EXACT_MAX_DOCS = int(
-    os.environ.get("BINWATCH_Q42_EXACT_MAX_DOCS", "20000")
-)
+Q42_EXACT_MAX_DOCS = 20000
 
 
 def _q42_sql(gate: int) -> str:

@@ -204,15 +204,13 @@ SCD2_STATE_SCHEMA = (
 # group on pmod(xxhash64(key), B) — B buckets, each holding the state of
 # every key that hashes into it as parallel arrays — so the per-group
 # protocol cost amortizes over ~#keys/B keys while the per-row logic (and
-# emitted rows) stay identical. B is env-tunable: it is a state-LAYOUT
-# constant in the same class as shuffle partitions, NOT a core-count fit —
-# production sizes it so one bucket's state row stays in the tens-of-KB
-# range (keys/bucket in the hundreds); the local default 64 keeps
-# 1 500-key fixtures at ~25 keys/bucket. Correctness does not depend on B
+# emitted rows) stay identical. B is a state-LAYOUT constant in the same
+# class as shuffle partitions, NOT a core-count fit: size it (the kernels'
+# ``state_buckets=``) so one bucket's state row stays in the tens-of-KB
+# range (keys/bucket in the hundreds); the default 64 keeps 1 500-key
+# fixtures at ~25 keys/bucket. Correctness does not depend on B
 # (tests pin B=1 and B=7 against the batch twin).
-import os as _os
-
-STATE_BUCKETS = int(_os.environ.get("SPARK_GRAFT_STATE_BUCKETS", "64"))
+STATE_BUCKETS = 64
 
 
 def _bucketed(df: DataFrame, key: str, n_buckets: int):

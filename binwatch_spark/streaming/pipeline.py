@@ -7,7 +7,9 @@ Topology parity with the reference (binwatch.go:118-144, SURVEY §3.2):
       → allowlist filter (F1)               envelope replay stream)
       → operation decode (F2)             column expressions (cdc.py)
       → itemByRow explode (P3)
-      → item sequencing (Q1)              row_number per micro-batch
+      → item sequencing (Q1)              one row_number over (binlog_file,
+                                            binlog_position): gapless ids
+                                            1..N per micro-batch
       → per route: predicate (R2)         foreachBatch, one pass: one flag
                                             column per route → keep rows any
                                             route matches (no Python UDF in
@@ -26,17 +28,25 @@ blsenderwork.go:193-213); ordering guaranteed only with senderWorkers=1
 binlog_position) into one partition and sent from the driver in that
 order; first route error aborts the batch (→ retry) like the reference
 aborts remaining routes (blsenderwork.go:197).
+
+Topologies: ``run_pipeline`` starts the one shared query;
+``run_routes_concurrent`` starts one ``run_pipeline`` per route, each on a
+config narrowed to that route. Either way ``run_supervised`` hands the
+queries to ``supervise_routes``, the one loop that waits on relay queries
+and applies restartSyncerOnError and stopInError.
 """
 
 from __future__ import annotations
 
 import json
+import logging
 import operator
 from collections.abc import Iterable
-from dataclasses import dataclass
+from dataclasses import dataclass, replace
 from functools import reduce
 from typing import Callable
 
+from pyspark.errors import StreamingQueryException
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
@@ -47,6 +57,7 @@ from binwatch_spark.sinks.connectors import make_connector
 from binwatch_spark.sources.envelope import read_envelope_stream
 from binwatch_spark.streaming.templates import compile_template, item_from_row
 
+log = logging.getLogger(__name__)
 
 @dataclass
 class CompiledRoute:
@@ -158,64 +169,14 @@ def envelope_transform(df: DataFrame, cfg: JobConfig) -> DataFrame:
     return df
 
 
-def _sequence_batch(batch_df: DataFrame, workers: int = 1) -> DataFrame:
-    """Q1: item ids in binlog order within the micro-batch (the stream
-    offset carries cross-batch ordering).
-
-    workers == 1 (the reference's only ordered configuration, README.md:38):
-    gapless ids via a global row_number — necessarily a single-task sort,
-    the price of a total order, and the same trade the reference makes by
-    requiring one sender for ordering.
-
-    workers > 1: the reference itself abandons delivery order, so a global
-    sort would serialize every micro-batch for a guarantee nobody gets
-    (VERDICT r03). Instead ids are sequenced PER BINLOG FILE —
-    row_number over (file) windows, encoded as file_seq << 32 | row_number.
-    MySQL binlog names carry a monotonic numeric suffix (mysql-bin.000001),
-    so ids are unique, monotonic within a file, and monotonic across
-    rotations; a name WITHOUT a numeric suffix falls back to a hash of the
-    full name mapped into [2^30, 2^31) — DISJOINT from the realistic
-    suffix range (MySQL suffixes are ≤7-digit ints ≪ 2^30) so a hashed
-    file cannot collide with a suffixed one, below 2^31 so the <<32 stays
-    inside signed 64-bit, and distinct hashed files collide only at ~2^-30.
-    A suffix ≥ 2^30 (impossible from MySQL, whose rotation counter is at
-    most 7 digits, but possible in a hand-built replay dir) is routed to
-    the hash fallback instead (ADVICE r04): ≥ 2^31 would overflow the
-    shift into negative ids, and [2^30, 2^31) is the band the hash
-    fallback itself maps into — keeping literal and hashed file ids in
-    disjoint bands. SINGLE-STREAM ASSUMPTION: one server's
-    binlog series per pipeline, like the reference (one syncer per config,
-    blreaderwork.go:119) — two distinct basenames sharing a numeric suffix
-    (a-bin.000002 + b-bin.000002 in a merged replay dir) would collide to
-    the same id range; merge streams upstream with distinct suffix ranges
-    or separate pipelines. No partition-less Window in the plan either
-    way."""
-    if workers <= 1:
-        w = Window.orderBy("binlog_file", "binlog_position")
-        return batch_df.withColumn(
-            "item_id", F.row_number().over(w).cast("bigint")
-        )
-    w = Window.partitionBy("binlog_file").orderBy("binlog_position")
-    suffix = F.nullif(
-        F.regexp_extract("binlog_file", r"(\d+)$", 1), F.lit("")
-    ).cast("bigint")
-    # cast overflow (≥2^63 digits) already nulls out; this guards both the
-    # 2^31..2^63 window where the shift below would go negative AND the
-    # [2^30, 2^31) band reserved for the hash fallback — a literal suffix
-    # there would collide with a hashed file's id range, so it routes to
-    # the hash fallback too (keeping literal and hashed bands disjoint)
-    suffix = F.when(suffix < F.lit(1 << 30), suffix)
-    file_seq = F.coalesce(
-        suffix,
-        (F.pmod(F.xxhash64("binlog_file"), F.lit(1 << 30)) + F.lit(1 << 30)).cast(
-            "bigint"
-        ),
-    )
-    return batch_df.withColumn(
-        "item_id",
-        F.shiftleft(file_seq, 32).cast("bigint")
-        + F.row_number().over(w).cast("bigint"),
-    )
+def _sequence_batch(batch_df: DataFrame) -> DataFrame:
+    """Q1: gapless item ids ``1..N`` in binlog order within the micro-batch
+    (the stream offset carries cross-batch ordering), like the reference's
+    ItemID (pools.go:65-74). One global row_number over (binlog_file,
+    binlog_position): a single-task sort, which is also the order the
+    driver's sender walks for senderWorkers=1."""
+    w = Window.orderBy("binlog_file", "binlog_position")
+    return batch_df.withColumn("item_id", F.row_number().over(w).cast("bigint"))
 
 
 def _route_flag(i: int) -> str:
@@ -305,9 +266,7 @@ class _RouteSender:
             connector.close()
 
 
-def _route_rows(
-    batch_df: DataFrame, routes: list[CompiledRoute], workers: int
-) -> DataFrame:
+def _route_rows(batch_df: DataFrame, routes: list[CompiledRoute]) -> DataFrame:
     """Q1 + R2 as one plan: sequence the batch, add one boolean column per
     route predicate (``_route_flag(i)``) and keep the rows at least one
     route matches. Shard membership (R1) is the sender's check, so the plan
@@ -327,18 +286,14 @@ def _route_rows(
     any_route = reduce(
         operator.or_, [F.col(_route_flag(i)) for i in range(len(routes))], F.lit(False)
     )
-    return _sequence_batch(batch_df, workers).select("*", *flags).filter(any_route)
+    return _sequence_batch(batch_df).select("*", *flags).filter(any_route)
 
 
-def make_batch_processor(
-    cfg: JobConfig, routes: list[CompiledRoute] | None = None
-) -> Callable[[DataFrame, int], None]:
+def make_batch_processor(cfg: JobConfig) -> Callable[[DataFrame, int], None]:
     """The R1→R2→T1→K1 stage as a foreachBatch function, one Spark action
     per trigger: the batch is sequenced once, each route's predicate
     becomes a boolean column, rows no route matches are dropped, and a
     single sender checks each row's shard and walks the routes for it.
-    ``routes`` restricts the processor to a subset — the per-route-query
-    topology (run_routes_concurrent) passes exactly one.
 
     senderWorkers == 1 sends from the driver through ``toLocalIterator``:
     _sequence_batch's global window already leaves the batch sorted in one
@@ -347,8 +302,7 @@ def make_batch_processor(
     ``maxFilesPerTrigger`` (the pool size) bounds what a trigger brings to
     the driver. senderWorkers > 1 sends from ``senderWorkers`` partitions,
     each with its own connections."""
-    if routes is None:
-        routes = compile_routes(cfg)
+    routes = compile_routes(cfg)
     connector_cfgs = {c.name: c for c in cfg.connectors}
     workers = max(1, cfg.server.sender_workers)
     driver_sender = (
@@ -363,7 +317,7 @@ def make_batch_processor(
             sender.close()
 
     def process_batch(batch_df: DataFrame, batch_id: int) -> None:
-        matched = _route_rows(batch_df, routes, workers)
+        matched = _route_rows(batch_df, routes)
         if driver_sender is not None:
             driver_sender.send(matched.toLocalIterator())
         else:
@@ -395,144 +349,124 @@ def run_routes_concurrent(
     cfg: JobConfig,
     available_now: bool = False,
     route_names: list[str] | None = None,
-):
-    """R3 as N CONCURRENT streaming queries — one per route, each with its
+) -> dict:
+    """R3 as N one-route pipelines: each selected route runs through
+    ``run_pipeline`` with a config narrowed to that route, so it has its
     own stream over the same source, its own checkpoint
-    (``checkpointDir/routes/<route>``) and its own lifecycle. This is the
-    topology a production deployment actually uses: one route's failure
-    (poison payload, connector outage) stops ONLY that route's query — the
-    others stream on — and the failed route restarts from ITS checkpoint,
-    redelivering only its own uncommitted batch (per-route at-least-once;
-    the shared-query form in ``run_pipeline`` instead aborts the whole
-    batch on the first route error, coupling route lifecycles exactly
-    like the reference's sender pool does, blsenderwork.go:151-219).
+    (``checkpointDir/routes/<route>``), its own query name
+    (``<server.id>-<route>``) and its own lifecycle. One route's failure
+    (poison payload, connector outage) stops only that route's query; the
+    others stream on, and ``supervise_routes`` restarts the failed one
+    from its own checkpoint, redelivering only its uncommitted batch
+    (per-route at-least-once). The shared query instead aborts the whole
+    batch on the first route error, coupling route lifecycles like the
+    reference's sender pool (blsenderwork.go:151-219).
 
     Trade stated: the source is consumed once PER ROUTE. Replay/file
     sources are free to re-read; on a live master each query is its own
     replica connection with its own DISTINCT server id (MySQL kills the
-    prior dump when a duplicate id registers, so shared ids would make
-    concurrent routes disconnect each other in a loop). Each route's id
-    is ``route.serverID`` if set, else ``source.serverID + 1 + position``
-    in the config's route list — position in the FULL list, so a subset
-    restart (``route_names``) keeps the same id it had. The +1 keeps
-    every derived id distinct from ``source.serverID`` itself, which the
-    shared single-query pipeline (or any other consumer of the same
-    config) uses — without it, per-route mode running concurrently with
-    the shared form would share route-0's id and the two dumps would
-    kill each other in a registration loop (ADVICE r12). The collision
-    check below can only see ids within THIS invocation. Budget one
-    binlog read per route, which is how real fan-out replicas are
-    deployed.
-    Ordering within a route follows its own query's senderWorkers=1 sort
-    exactly as in the shared form.
+    prior dump when a duplicate id registers). Each route's id is
+    ``route.serverID`` if set, else ``source.serverID + 1 + position`` in
+    the config's route list — position in the FULL list, so a subset
+    restart (``route_names``) keeps the same id, and never
+    ``source.serverID`` itself, which the shared query of the same config
+    uses. The collision check can only see ids within this invocation.
 
-    ``route_names`` restarts a subset (e.g. just the failed route) against
-    the same per-route checkpoints. Returns {route_name: StreamingQuery}.
+    Returns {route_name: StreamingQuery}.
     """
-    from dataclasses import replace as _dc_replace
-
-    all_routes = compile_routes(cfg)
-    by_name = {r.name: i for i, r in enumerate(all_routes)}
     route_ids = {
-        r.name: (
-            r_cfg.server_id or cfg.source.server_id + 1 + by_name[r.name]
-        )
-        for r, r_cfg in zip(all_routes, cfg.routes)
+        r.name: r.server_id or cfg.source.server_id + 1 + i
+        for i, r in enumerate(cfg.routes)
     }
-    if not cfg.source.replay_dir and len(set(route_ids.values())) != len(
-        route_ids
-    ):
+    if not cfg.source.replay_dir and len(set(route_ids.values())) != len(route_ids):
         raise ConfigError(
             "per-route on a live source needs distinct replica server ids; "
             f"explicit route serverID overrides collide: {route_ids}"
         )
-    routes = all_routes
-    if route_names is not None:
-        routes = [r for r in routes if r.name in route_names]
+    compile_routes(cfg)  # fail fast on any route before one query starts
     queries = {}
-    for route in routes:
-        route_cfg = cfg
-        if not cfg.source.replay_dir:
-            route_cfg = _dc_replace(
-                cfg,
-                source=_dc_replace(
-                    cfg.source, server_id=route_ids[route.name]
-                ),
-            )
-        stream = envelope_transform(source_stream(spark, route_cfg), cfg)
-        writer = (
-            stream.writeStream.foreachBatch(
-                make_batch_processor(cfg, routes=[route])
-            )
-            .option(
-                "checkpointLocation",
-                f"{cfg.server.checkpoint_dir}/routes/{route.name}",
-            )
-            .queryName(f"{cfg.server.id}-{route.name}")
+    for route in cfg.routes:
+        if route_names is not None and route.name not in route_names:
+            continue
+        route_cfg = replace(
+            cfg,
+            routes=[route],
+            server=replace(
+                cfg.server,
+                id=f"{cfg.server.id}-{route.name}",
+                checkpoint_dir=f"{cfg.server.checkpoint_dir}/routes/{route.name}",
+            ),
+            source=cfg.source
+            if cfg.source.replay_dir
+            else replace(cfg.source, server_id=route_ids[route.name]),
         )
-        if available_now:
-            writer = writer.trigger(availableNow=True)
-        queries[route.name] = writer.start()
+        queries[route.name] = run_pipeline(spark, route_cfg, available_now)
     return queries
+
+
+def _log_failure(name: str, exc: Exception) -> None:
+    log.error("query %s failed: %s", name, exc)
 
 
 def supervise_routes(
     spark: SparkSession,
     cfg: JobConfig,
     queries: dict,
+    restart: Callable[[str], dict],
     max_restarts: int = 10,
-    restart: Callable[[str], dict] | None = None,
-    on_failure: Callable[[str, Exception], None] | None = None,
+    on_failure: Callable[[str, Exception], None] = _log_failure,
 ) -> list[str]:
-    """Continuous-mode supervisor for ``run_routes_concurrent``: a
-    sequential ``awaitTermination`` would block on the first
-    never-terminating query and mask a sibling's failure indefinitely
-    (ADVICE r11). ``awaitAnyTermination`` wakes on ANY route ending; a
-    failed route is reported promptly via ``on_failure`` and — when
-    ``restartSyncerOnError`` is set — restarted ALONE against its own
-    checkpoint (run_supervised semantics, per route). Returns the names
-    of terminally-failed routes once no queries remain active; a poison
-    route is bounded by ``max_restarts`` like run_supervised.
+    """The one loop that watches relay queries — the shared query or the
+    per-route ones — with the reference's error policy
+    (blreaderwork.go:149-190, logger.go:83-85). Each failure is reported
+    through ``on_failure``. With ``restartSyncerOnError`` the failed query
+    alone restarts through ``restart(name)``, which returns
+    ``{name: StreamingQuery}`` started against the same checkpoint, at
+    most ``max_restarts`` times. A terminal failure (restarts off or spent)
+    with ``stopInError`` stops the remaining queries and raises the
+    failed query's exception; without it, the query is dropped and the
+    rest stay supervised. Returns the names of terminally failed queries
+    once none is active.
 
-    Ordering matters (ADVICE r12): ``resetTerminated`` runs FIRST each
-    iteration, then the ``isActive`` sweep, and ``awaitAnyTermination``
-    only when every tracked query is still active. A route that died
-    between ``writer.start()`` and supervisor entry (or between two
-    wake-ups) is caught by the sweep — termination STATE persists across
-    the reset even though the termination SIGNAL does not — while a route
-    dying after the reset raises a fresh signal for the await. The r11
-    ordering (reset after the await) could wipe a fast failure's signal
-    and then block on ``awaitAnyTermination`` forever in continuous
-    mode."""
-    if restart is None:
-        restart = lambda name: run_routes_concurrent(  # noqa: E731
-            spark, cfg, route_names=[name]
-        )
+    Order per iteration: ``resetTerminated`` first, then the ``isActive``
+    sweep, then ``awaitAnyTermination`` only when every tracked query is
+    active. Termination STATE survives the reset even though the SIGNAL
+    does not, so a query that died before entry or between wake-ups is
+    caught by the sweep, while one dying after the reset raises a fresh
+    signal for the await. ``awaitAnyTermination`` raises when the query
+    that ended had failed, even while its siblings are active; the
+    exception is dropped and the sweep picks the failure up from the
+    query itself."""
     queries = dict(queries)
     restarts: dict[str, int] = {}
     failed: list[str] = []
     while queries:
         spark.streams.resetTerminated()
         if all(q.isActive for q in queries.values()):
-            spark.streams.awaitAnyTermination()
+            try:
+                spark.streams.awaitAnyTermination()
+            except StreamingQueryException:
+                pass  # the sweep below reads the failure off the query
         for name, q in list(queries.items()):
             if q.isActive:
                 continue
             exc = q.exception()
-            if exc is None:  # clean stop()
-                queries.pop(name)
+            del queries[name]
+            if exc is None:  # clean stop, or availableNow drained
                 continue
-            if on_failure is not None:
-                on_failure(name, exc)
+            on_failure(name, exc)
             if (
                 cfg.server.restart_syncer_on_error
                 and restarts.get(name, 0) < max_restarts
             ):
                 restarts[name] = restarts.get(name, 0) + 1
                 queries.update(restart(name))
+            elif cfg.server.stop_in_error:
+                for other in queries.values():
+                    other.stop()
+                raise exc
             else:
                 failed.append(name)
-                queries.pop(name)
     return failed
 
 
@@ -541,30 +475,26 @@ def run_supervised(
     cfg: JobConfig,
     available_now: bool = False,
     max_restarts: int = 10,
-) -> None:
-    """restartSyncerOnError parity (blreaderwork.go:149-190): when the
-    streaming query dies and the flag is set, rebuild and restart it instead
-    of exiting.
+    per_route: bool = False,
+) -> list[str]:
+    """Start the relay — one shared query, or one query per route when
+    ``per_route`` is set — and supervise it with ``supervise_routes``
+    until no query is active. Returns the names of queries that failed
+    terminally; raises the failure under ``stopInError``.
 
-    The reference closes the failed syncer and re-opens it from the live
-    master position. The Spark twin restarts the query against the SAME
-    checkpoint: Structured Streaming's offset log already anchors the
-    restart at the first uncommitted batch, so transient failures (sink
-    down, network) resume exactly where the reference would — and because
-    the failed batch was never committed, at-least-once delivery is
-    preserved across the restart (C1 semantics). A poison batch that keeps
-    failing is bounded by max_restarts, then handled by the stopInError
-    policy like any other terminal error.
+    restartSyncerOnError parity (blreaderwork.go:149-190): the reference
+    closes the failed syncer and re-opens it; here the failed query is
+    started again against the SAME checkpoint. Structured Streaming's
+    offset log anchors the restart at the first uncommitted batch, so the
+    failed batch is redelivered (at-least-once, C1). A restart keeps
+    ``available_now``.
     """
-    restarts = 0
-    while True:
-        query = run_pipeline(spark, cfg, available_now=available_now)
-        try:
-            query.awaitTermination()
-            return  # clean termination (availableNow drained, or stop())
-        except Exception:
-            if not cfg.server.restart_syncer_on_error or restarts >= max_restarts:
-                if cfg.server.stop_in_error:
-                    raise
-                return
-            restarts += 1
+
+    def start(names: list[str] | None = None) -> dict:
+        if per_route:
+            return run_routes_concurrent(spark, cfg, available_now, names)
+        return {cfg.server.id: run_pipeline(spark, cfg, available_now)}
+
+    return supervise_routes(
+        spark, cfg, start(), lambda name: start([name]), max_restarts
+    )

@@ -230,11 +230,10 @@ def test_route_rows_plan_has_no_python_udf(spark, tmp_path):
         )
         cfg = parse(doc)
         batch = envelope_transform(read_envelope_batch(spark, f"{tmp}/replay"), cfg)
-        for workers in (1, 2):
-            qe = _route_rows(batch, compile_routes(cfg), workers)._jdf.queryExecution()
-            plan = qe.analyzed().toString() + qe.executedPlan().toString()
-            for node in ("ArrowEvalPython", "BatchEvalPython", "to_json"):
-                assert node not in plan, (key_template, workers, node)
+        qe = _route_rows(batch, compile_routes(cfg))._jdf.queryExecution()
+        plan = qe.analyzed().toString() + qe.executedPlan().toString()
+        for node in ("ArrowEvalPython", "BatchEvalPython", "to_json"):
+            assert node not in plan, (key_template, node)
 
 
 class _FlakyWebhook:
@@ -441,43 +440,27 @@ def test_schema_probe_and_positional_binding(spark):
     assert obs.get["events_seen"] == 3
 
 
-def test_sequence_batch_no_global_sort_when_workers_gt_1(spark, tmp_path):
-    """VERDICT r03: at senderWorkers>1 the reference abandons delivery order
-    (README.md:38), so _sequence_batch must not serialize the batch through
-    a partition-less Window — ids come from per-file windows instead."""
-    import contextlib
-    import io
-
+def test_sequence_batch_gapless_in_binlog_order(spark):
+    """Q1: item ids are 1..N in (binlog_file, binlog_position) order over
+    the whole micro-batch, across a binlog rotation and whatever the
+    input's partitioning (the reference's gapless ItemID, pools.go:65-74)."""
     from binwatch_spark.streaming.pipeline import _sequence_batch
 
+    rows = [
+        ("mysql-bin.000002", 80),
+        ("mysql-bin.000001", 200),
+        ("mysql-bin.000002", 50),
+        ("mysql-bin.000001", 100),
+        ("mysql-bin.000001", 300),
+    ]
     df = spark.createDataFrame(
-        [("mysql-bin.000001", 100), ("mysql-bin.000002", 50)],
-        "binlog_file string, binlog_position long",
+        rows, "binlog_file string, binlog_position long"
+    ).repartition(3)
+    got = sorted(
+        (r["item_id"], r["binlog_file"], r["binlog_position"])
+        for r in _sequence_batch(df).collect()
     )
-
-    def plan_of(d):
-        buf = io.StringIO()
-        with contextlib.redirect_stdout(buf):
-            d.explain("formatted")
-        return buf.getvalue()
-
-    ordered = plan_of(_sequence_batch(df, workers=1))
-    # the ordered path pays the global sort on purpose (total order)
-    assert "Window" in ordered
-
-    parallel = plan_of(_sequence_batch(df, workers=2))
-    # the window is partitioned by binlog_file (its hashpartitioning shows in
-    # the exchange), so no single-task global sort exists in the plan
-    assert "hashpartitioning(binlog_file" in parallel
-    # executing it must not trip the single-partition WindowExec warning path:
-    # every id is unique and encodes (file_seq << 32) + within-file rank
-    rows = {
-        (r["binlog_file"], r["binlog_position"]): r["item_id"]
-        for r in _sequence_batch(df, workers=2).collect()
-    }
-    assert rows[("mysql-bin.000001", 100)] == (1 << 32) + 1
-    assert rows[("mysql-bin.000002", 50)] == (2 << 32) + 1
-    assert len(set(rows.values())) == 2
+    assert got == [(i + 1, f, p) for i, (f, p) in enumerate(sorted(rows))]
 
 
 def test_pipeline_workers_gt_1_delivers_all(spark, tmp_path):
@@ -495,14 +478,14 @@ def test_pipeline_workers_gt_1_delivers_all(spark, tmp_path):
     ops = sorted(p["Data"]["Operation"] for p in payloads)
     assert ops == ["DELETE", "INSERT", "INSERT", "UPDATE"]
     ids = [p["ItemID"] for p in payloads]
-    assert len(set(ids)) == 4
+    assert sorted(ids) == [1, 2, 3, 4]  # gapless per batch, as with one sender
 
 
 def test_sharding_with_pipe_template_uses_fallback_renderer(spark, tmp_path):
-    """A key template with pipes can't compile natively → the pandas
-    fallback renderer runs, including the narrowed-struct path (template
-    references no .Data.Rows, so the payload column is not serialized).
-    Totality + disjointness must still hold across shards."""
+    """A key template with pipes (``{{ .Data.Table | upper }}``) is
+    rendered per row by the sender's template engine, like any other key
+    template, and hashed for shard membership. Totality and disjointness
+    must hold across shards, and one key puts every event in one shard."""
     tmp = str(tmp_path)
     write_replay(f"{tmp}/replay", EVENTS)
     seen: list[str] = []
@@ -515,7 +498,6 @@ def test_sharding_with_pipe_template_uses_fallback_renderer(spark, tmp_path):
                 "enabled": True,
                 "count": 2,
                 "index": index,
-                # pipes → general renderer; no .Data.Rows → narrowed struct
                 "keyTemplate": "{{ .Data.Table | upper }}",
             },
         )
@@ -533,37 +515,6 @@ def test_sharding_with_pipe_template_uses_fallback_renderer(spark, tmp_path):
     assert keys == expected
     # affinity: all events share table "users" → one key → ONE shard got all
     assert sorted(len(part) for part in seen) == [0, len(expected)]
-
-
-def test_sequence_batch_huge_suffix_routes_to_hash_fallback(spark):
-    """ADVICE r04: a numeric suffix >= 2^31 (impossible from MySQL, possible
-    in a hand-built replay dir) must not overflow shiftleft(...,32) into
-    negative ids — it routes to the hash fallback range instead."""
-    from binwatch_spark.streaming.pipeline import _sequence_batch
-
-    df = spark.createDataFrame(
-        [
-            ("weird-bin.99999999999", 10),   # > 2^31: hash fallback
-            ("mysql-bin.000003", 10),        # normal suffix path
-            ("no-suffix-name", 10),          # no digits: hash fallback
-            ("odd-bin.2000000000", 10),      # in [2^30, 2^31): the hash
-                                             # band — must ALSO fall back or
-                                             # it could collide with a
-                                             # hashed file's id range
-        ],
-        "binlog_file string, binlog_position long",
-    )
-    rows = {
-        r["binlog_file"]: r["item_id"]
-        for r in _sequence_batch(df, workers=2).collect()
-    }
-    assert all(v > 0 for v in rows.values())
-    assert rows["mysql-bin.000003"] == (3 << 32) + 1
-    # fallback ids live in the [2^30, 2^31) << 32 band; literal suffixes
-    # stay below it, so the bands are disjoint by construction
-    for name in ("weird-bin.99999999999", "no-suffix-name", "odd-bin.2000000000"):
-        assert (1 << 30) <= (rows[name] >> 32) < (1 << 31)
-    assert len(set(rows.values())) == 4
 
 
 def test_binlog_reader_max_bytes_per_batch(tmp_path):
@@ -1103,7 +1054,7 @@ def test_single_pass_fan_out_order_and_redelivery(spark, tmp_path):
         batch = envelope_transform(read_envelope_batch(spark, f"{tmp}/replay"), cfg)
         buf = io.StringIO()
         with contextlib.redirect_stdout(buf):
-            _route_rows(batch, compile_routes(cfg), workers=1).explain()
+            _route_rows(batch, compile_routes(cfg)).explain()
         assert buf.getvalue().count(" Sort [") == 1
 
         run_supervised(spark, cfg, available_now=True, max_restarts=3)
@@ -1558,3 +1509,137 @@ def test_supervise_routes_catches_failure_before_entry(tmp_path):
         _FakeStreams.awaitAnyTermination = orig_wait
     assert failed == ["fast-fail"]
     assert failures == ["fast-fail"]
+
+
+def test_supervise_routes_survives_raising_await(tmp_path, monkeypatch):
+    """PySpark's awaitAnyTermination raises StreamingQueryException when the
+    query that ended had failed, even while its siblings are active. The
+    supervisor must read the failure off the query instead of dying: the
+    failed route restarts alone, the sibling keeps running, and a route
+    whose restarts are spent is returned, not raised."""
+    from pyspark.errors import StreamingQueryException
+
+    from binwatch_spark.streaming.pipeline import supervise_routes
+
+    doc = make_cfg(str(tmp_path))
+    doc["server"]["restartSyncerOnError"] = True
+    cfg = parse(doc)
+
+    healthy = _ScriptedQuery(["tick"] * 4 + [None])
+    flaky = _ScriptedQuery(["tick", RuntimeError("sink down")])
+    live = [healthy, flaky]
+
+    def raising_wait(self):
+        running = [q for q in live if q.isActive]
+        for q in running:
+            q.advance()
+        if any(not q.isActive and q.exception() is not None for q in running):
+            raise StreamingQueryException("query terminated with exception")
+
+    restart_log: list[str] = []
+
+    def restart(name):
+        restart_log.append(name)
+        q = _ScriptedQuery(["tick", RuntimeError("sink still down")])
+        live.append(q)
+        return {name: q}
+
+    sibling_active_at_failure: list[bool] = []
+
+    def on_failure(name, exc):
+        sibling_active_at_failure.append(healthy.isActive)
+
+    monkeypatch.setattr(_FakeStreams, "awaitAnyTermination", raising_wait)
+    failed = supervise_routes(
+        _FakeSparkForSupervise(),
+        cfg,
+        {"all-ops": healthy, "inserts-only": flaky},
+        restart=restart,
+        max_restarts=1,
+        on_failure=on_failure,
+    )
+    assert failed == ["inserts-only"]
+    assert restart_log == ["inserts-only"]
+    assert sibling_active_at_failure == [True, True]
+    assert not healthy.isActive and healthy.exception() is None  # ended clean
+
+
+def _flaky_insert_route_doc(tmp: str, sink) -> dict:
+    """make_cfg with the INSERT route's connector pointed at ``sink``."""
+    doc = make_cfg(tmp)
+    doc["connectors"][0] = {
+        "name": "sink-insert",
+        "type": "webhook",
+        "webhook": {"url": f"http://127.0.0.1:{sink.port}/hook"},
+    }
+    return doc
+
+
+def test_per_route_supervised_restarts_failed_route_alone(spark, tmp_path):
+    """--per-route --available-now under restartSyncerOnError: the webhook
+    route's first send gets a 500, its query fails and restarts alone from
+    its own checkpoint, redelivering both INSERTs; the file route delivers
+    its 4 events exactly once."""
+    from binwatch_spark.streaming.pipeline import run_supervised
+
+    tmp = str(tmp_path)
+    write_replay(f"{tmp}/replay", EVENTS)
+    sink = _FlakyWebhook(fail_n=1)
+    try:
+        doc = _flaky_insert_route_doc(tmp, sink)
+        doc["server"]["restartSyncerOnError"] = True
+        failed = run_supervised(
+            spark, parse(doc), available_now=True, max_restarts=3, per_route=True
+        )
+        assert failed == []
+        # one 500'd attempt, then the restarted query's two INSERTs
+        assert len(sink.requests) == 3
+        payloads = [json.loads(b) for b in sink.received]
+        assert [p["op"] for p in payloads] == ["INSERT", "INSERT"]
+        all_ops = [json.loads(p) for p in read_lines(f"{tmp}/out/all.jsonl")]
+        positions = [(p["Log"]["BinlogFile"], p["Log"]["BinlogPosition"]) for p in all_ops]
+        assert sorted(positions) == sorted(
+            (f, pos) for f, pos, _, tbl, _, _ in EVENTS if tbl == "users"
+        )
+    finally:
+        sink.shutdown()
+
+
+def test_per_route_stop_in_error_raises_and_stops_all(spark, tmp_path):
+    """stopInError in per-route mode: a route's terminal failure raises
+    that route's exception and leaves no relay query active."""
+    from pyspark.errors import StreamingQueryException
+
+    from binwatch_spark.streaming.pipeline import run_supervised
+
+    tmp = str(tmp_path)
+    write_replay(f"{tmp}/replay", EVENTS)
+    sink = _FlakyWebhook(fail_n=10**9)
+    try:
+        doc = _flaky_insert_route_doc(tmp, sink)
+        doc["server"]["stopInError"] = True
+        with pytest.raises(StreamingQueryException, match="500"):
+            run_supervised(spark, parse(doc), available_now=True, per_route=True)
+        assert not [q for q in spark.streams.active if q.name.startswith("it-test")]
+    finally:
+        sink.shutdown()
+
+
+def test_cli_shared_query_terminal_failure_exits_1(tmp_path):
+    """Without stopInError a terminal failure of the shared query still
+    ends the process non-zero, so an orchestrator sees a dead relay."""
+    import yaml as _yaml
+
+    from binwatch_spark.__main__ import main
+
+    tmp = str(tmp_path)
+    write_replay(f"{tmp}/replay", EVENTS)
+    sink = _FlakyWebhook(fail_n=10**9)
+    try:
+        cfg_path = f"{tmp}/config.yaml"
+        with open(cfg_path, "w", encoding="utf-8") as fh:
+            _yaml.safe_dump(_flaky_insert_route_doc(tmp, sink), fh)
+        rc = main(["sync", "--config", cfg_path, "--available-now", "--no-serve-api"])
+        assert rc == 1
+    finally:
+        sink.shutdown()

@@ -28,9 +28,9 @@ def main() -> None:
         "",
         "Auto-generated from the registry (`python tools/gen_query_index.py`).",
         "Correctness status refers to the driver-grade DuckDB oracle check",
-        "(`CORRECTNESS_local_r*.json`); 'rows-only' entries are documented",
-        "designs with no SQL-expressible twin. Full scale argument:",
-        "`docs/ARCHITECTURE.md`; plan pins: `tests/test_plans.py`.",
+        "(`CORRECTNESS_sf1.json`, re-run by `tools/verify_all.py`); 'rows-only'",
+        "entries are documented designs with no SQL-expressible twin. Full scale",
+        "argument: `docs/ARCHITECTURE.md`; plan pins: `tests/test_plans.py`.",
         "",
         "| Query | Check | What it does |",
         "|---|---|---|",
