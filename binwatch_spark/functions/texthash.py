@@ -258,8 +258,14 @@ def make_minhash_band_udf():
 
 
 def make_shingle_minhash_band_udf(k: int):
-    """Fused text → LSH band keys for character k-gram shingles: the
-    make_shingle_minhash_sig_udf kernel with _band_fold applied in-kernel."""
+    """Fused text → LSH band keys for character k-gram shingles:
+    lowercase, rolling polyhash over every gram position, then the K affine
+    permutations and _band_fold, all in one numpy pass, so no shingle
+    string or signature value ever leaves the kernel. Bit-identical to
+    make_minhash_band_udf over make_shingles_udf(k): the rolling hash
+    (acc*131+ord)%P per window equals _polyhash_py of the substring, and
+    min over the multiset of window hashes equals min over the distinct
+    set, so skipping dedup is exact."""
 
     @F.pandas_udf("array<bigint>")
     def shingle_bands(texts: pd.Series) -> pd.Series:
@@ -279,41 +285,6 @@ def make_shingle_minhash_band_udf(k: int):
         return pd.Series(_batch_band_keys([gram_hashes(t) for t in texts]))
 
     return shingle_bands
-
-
-def make_shingle_minhash_sig_udf(k: int):
-    """Fused text → MinHash signature for character k-gram shingles:
-    lowercase, rolling polyhash over every gram position, then the K affine
-    permutations — all numpy, one Arrow pass, no shingle strings ever
-    materialized. Bit-identical to make_minhash_sig_udf(make_shingles_udf(k))
-    because (a) the rolling hash (acc*131+ord)%P per window equals
-    _polyhash_py of the substring, and (b) min over the multiset of window
-    hashes equals min over the distinct set, so skipping dedup is exact.
-    This is the 100 TB signature kernel: the unfused path ships ~len(text)
-    short strings per document through Arrow twice and hashes them in
-    interpreted Python (shingle vocabulary is too large for the token-hash
-    memo to help)."""
-
-    @F.pandas_udf("array<bigint>")
-    def shingle_sig(texts: pd.Series) -> pd.Series:
-        def sig(t):
-            if t is None:
-                return None
-            low = t.lower()
-            n = len(low) - k + 1
-            if n <= 0:
-                return None
-            codes = np.fromiter(map(ord, low), dtype=np.int64, count=len(low))
-            acc = codes[:n].copy()
-            for j in range(1, k):
-                acc = (acc * POLY_MULT + codes[j : j + n]) % POLY_PRIME
-            return ((_MINHASH_A_COL * acc[None, :] + _MINHASH_B_COL) % POLY_PRIME).min(
-                axis=1
-            )
-
-        return texts.apply(sig)
-
-    return shingle_sig
 
 
 def make_shingles_udf(k: int):

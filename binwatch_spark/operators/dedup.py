@@ -364,7 +364,6 @@ def minhash_lsh_pairs(
     threshold: float,
     tokenizer=distinct_tokens,
     verify: str = "auto",
-    sig_fn=None,
     band_fn=None,
     vectorized_max_docs: int = 100_000,
 ) -> DataFrame:
@@ -377,11 +376,6 @@ def minhash_lsh_pairs(
     0.85; see the banding-parameter note in functions.texthash).
     Output: (i, j, jac) with i < j.
 
-    sig_fn: optional fused Column->Column producing the array<bigint>
-    signature straight from the text column (make_shingle_minhash_sig_udf),
-    bypassing tokenizer + make_minhash_sig_udf. The tokenizer is still used
-    for exact verification of candidates.
-
     band_fn: optional fused Column->Column producing the N_BANDS int64 band
     keys straight from the input column (make_minhash_band_udf over the
     tokenized column, make_shingle_minhash_band_udf over raw text) — the
@@ -392,12 +386,6 @@ def minhash_lsh_pairs(
         keyed_src = spread(df, id_col).withColumn("_bks", band_fn(F.col(text_col)))
         keyed_cols = [F.col("_bks")[b].alias(f"bk{b}") for b in range(N_BANDS)]
         sigs = None
-    elif sig_fn is not None:
-        sigs = spread(df, id_col).withColumn("_sig", sig_fn(F.col(text_col)))
-        sigs = sigs.select(
-            F.col(id_col),
-            *[F.col("_sig")[i].alias(f"mh{i}") for i in range(MINHASH_K)],
-        )
     else:
         sigs = minhash_signatures(df, text_col, id_col, tokenizer)
     # Materialize the signature table: it feeds both sides of the candidate
@@ -599,10 +587,10 @@ def shingle_minhash_lsh_pairs(
     """Near-dup pairs over character k-gram shingles — the order-aware rung
     of the dedup ladder (token-set MinHash treats reordered text as
     identical; shingling doesn't). Same banding + exact-Jaccard verify as
-    minhash_lsh_pairs; signatures come from the fused text→signature numpy
-    kernel (make_shingle_minhash_sig_udf — shingle strings never
-    materialize), and because the shingle vocabulary is naturally large,
-    candidate verification takes the vectorized exact-set path rather than
+    minhash_lsh_pairs; band keys come from the fused text→band-key numpy
+    kernel (make_shingle_minhash_band_udf — shingle strings and signature
+    values never materialize), and because the shingle vocabulary is
+    naturally large, candidate verification takes the vectorized exact-set path rather than
     the ≤63-word bitmask (shingle extraction runs as an Arrow kernel only
     for the verified candidates)."""
     from binwatch_spark.functions.texthash import (
@@ -754,12 +742,7 @@ def connected_components(
     union-find (gated by one count on the persisted pair stream): at that
     size every distributed round is scheduling overhead, not compute.
     Pass driver_max_edges=0 to force the distributed loop (tests do)."""
-    from binwatch_spark import plancap
-
     pairs = pairs.select("i", "j").persist()
-    # the pair-GENERATION plan is where a dedup pipeline's cost lives —
-    # record it before the gate count collapses the audit to ExistingRDD
-    plancap.capture("connected_components.pairs_input", pairs)
     if driver_max_edges and pairs.count() <= driver_max_edges:
         out = _driver_union_find(pairs)
         pairs.unpersist()
@@ -798,7 +781,6 @@ def connected_components(
             .groupBy("node")
             .agg(F.min("label").alias("label"))
         )
-        plancap.capture("connected_components.round", round_df)
         new_labels = round_df.localCheckpoint()
         changed = (
             new_labels.alias("n")
@@ -848,10 +830,7 @@ def connected_components_star(
     property-tested to identical labelings on random graphs
     (tests/test_graph.py). Same bounded driver union-find gate as
     ``connected_components`` (driver_max_edges=0 forces distributed)."""
-    from binwatch_spark import plancap
-
     pairs = pairs.select("i", "j").persist()
-    plancap.capture("connected_components_star.pairs_input", pairs)
     if driver_max_edges and pairs.count() <= driver_max_edges:
         out = _driver_union_find(pairs)
         pairs.unpersist()
@@ -911,7 +890,6 @@ def connected_components_star(
             )
             .distinct()
         )
-        plancap.capture("connected_components_star.round", round_df)
         new_edges = round_df.localCheckpoint()
         n_new = new_edges.count()
         # Fixed point of the FULL round (large∘small): set equality vs the

@@ -720,9 +720,6 @@ def kmeans_lloyd_rounds(
                 .groupBy("_cid", "_pos")
                 .agg(F.round(F.avg("_xv"), 6).alias("_c"))
             )
-            from binwatch_spark import plancap
-
-            plancap.capture("kmeans.update_round", update_df)
             long_rows = update_df.collect()
             by_cid: dict = {}
             for lr in long_rows:
@@ -742,9 +739,6 @@ def kmeans_lloyd_rounds(
             update_df = assigned.groupBy(
                 F.col("_a.cell_id").alias("_cid")
             ).agg(F.expr(f"array({arr})").alias("_c"))
-            from binwatch_spark import plancap
-
-            plancap.capture("kmeans.update_round", update_df)
             cent_rows = sorted(
                 (r[0], r[1]) for r in update_df.collect()
             )
@@ -815,9 +809,6 @@ def power_iteration_rounds(
                     ).alias("_u")
                 )
             )
-            from binwatch_spark import plancap
-
-            plancap.capture("pca_power.round", round_df)
             long_rows = round_df.collect()
             by_pos = {lr["_pos"]: lr["_u"] for lr in long_rows}
             u = [float(by_pos[i]) for i in range(dim)]
@@ -847,9 +838,6 @@ def power_iteration_rounds(
                     for i in range(dim)
                 ]
             )
-            from binwatch_spark import plancap
-
-            plancap.capture("pca_power.round", sums_df)
             sums = sums_df.first()
             u = [float(sums[f"u{i}"]) for i in range(dim)]
         nrm_sq = 0.0

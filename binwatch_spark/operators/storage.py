@@ -96,19 +96,6 @@ def write_bucketed(
     writer.saveAsTable(table)
 
 
-def bucketed_join(
-    spark: SparkSession, left_table: str, right_table: str, on: str | list[str]
-) -> DataFrame:
-    """Join two same-bucketed catalog tables on their bucket key.
-
-    With both sides bucketed identically this plans as a zero-exchange
-    sort-merge join: each task reads bucket i of both tables. The helper is
-    trivial by design — the work happened at write time; asserting the
-    no-shuffle plan is the test's job.
-    """
-    return spark.table(left_table).join(spark.table(right_table), on=on)
-
-
 def write_partitioned(
     df: DataFrame, path: str, partition_cols: list[str]
 ) -> None:

@@ -974,66 +974,6 @@ def q126_cluster_balanced_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
 PCA_ROUNDS = 4
 
 
-def _pca_power_sql_long(k: int, dim: int) -> str:
-    """Long-form twin of _pca_power_sql for ARBITRARY dim — the oracle the
-    dim≥512 rung is pinned against (tests/test_wide_dim.py). The unrolled
-    builder's SQL text is O(k·dim²) (each of dim sums re-spells the
-    dim-term dot), which at dim 512 is a ~30 MB statement; this twin stays
-    O(dim) by using DuckDB's sequential-fold primitives, every one already
-    parity-pinned elsewhere in the registry: list_dot_product for the
-    projection s = x·v AND the norm (0.0-seeded ascending fold — the same
-    IEEE chain as the Spark wide rung's zip_with/aggregate and the driver
-    loop's ascending += ), unnest(range) + GROUP BY pos for the
-    per-dimension DECIMAL(28,10) sums (exact, order-free), and
-    list(… ORDER BY pos) to rebuild the direction between rounds."""
-    v0 = "[" + ", ".join(
-        "1.0" if i == 0 else "0.0" for i in range(dim)
-    ) + "]"
-    parts = [
-        "emb AS MATERIALIZED (SELECT CAST(embedding AS DOUBLE[]) AS x"
-        " FROM embeddings WHERE embedding IS NOT NULL)",
-        f"pos AS (SELECT unnest(range(1, {dim + 1})) AS d)",
-        f"w0 AS (SELECT {v0}::DOUBLE[] AS v)",
-    ]
-    for r in range(1, k + 1):
-        prev = f"w{r - 1}"
-        parts.append(
-            f"""g{r} AS MATERIALIZED (
-  SELECT p.d AS pos,
-         sum(CAST(list_dot_product(e.x, w.v) * e.x[p.d]
-                  AS DECIMAL(28,10))) AS us
-  FROM emb e CROSS JOIN {prev} w CROSS JOIN pos p
-  GROUP BY p.d)"""
-        )
-        parts.append(
-            f"u{r} AS (SELECT list(CAST(us AS DOUBLE) ORDER BY pos) AS u"
-            f" FROM g{r})"
-        )
-        parts.append(
-            f"n{r} AS (SELECT sqrt(list_dot_product(u, u)) AS nrm"
-            f" FROM u{r})"
-        )
-        parts.append(
-            f"w{r} AS (SELECT list_transform(u.u, z -> z / n.nrm) AS v"
-            f" FROM u{r} u CROSS JOIN n{r} n)"
-        )
-    selects = [
-        f"SELECT CAST({r} AS BIGINT) AS round,"
-        f" round(n.nrm, 6) AS lambda_n,"
-        f" round(w.v[1], 8) AS c0, round(w.v[2], 8) AS c1,"
-        f" round(w.v[3], 8) AS c2, round(w.v[4], 8) AS c3"
-        f" FROM w{r} w CROSS JOIN n{r} n"
-        for r in range(1, k + 1)
-    ]
-    return (
-        "WITH "
-        + ",\n".join(parts)
-        + "\n"
-        + "\nUNION ALL\n".join(selects)
-        + "\nORDER BY round"
-    )
-
-
 def _pca_power_sql(k: int) -> str:
     """Oracle CTE builder for q148's power iteration (the q145/q147
     materialized-chain pattern): v0 is the first basis vector; round r

@@ -1288,8 +1288,6 @@ def _bpe_train_merges(freq: DataFrame) -> list[tuple[int, str, int]]:
     (applies it to the corpus). Returns [(rank, raw sentinel-coded pair,
     count)]; the winner collect per round is the q98/q145 O(model)
     driver pattern."""
-    from binwatch_spark import plancap
-
     cur = freq.select(F.col("word").alias("sym"), "freq")
     merges: list[tuple[int, str, int]] = []
     for r in range(1, BPE_MERGES + 1):
@@ -1300,7 +1298,6 @@ def _bpe_train_merges(freq: DataFrame) -> list[tuple[int, str, int]]:
             .orderBy(F.col("cnt").desc(), "pair")
             .limit(1)
         )
-        plancap.capture("bpe_train.round", win_df)
         win = win_df.first()
         merges.append((r, win["pair"], int(win["cnt"])))
         if r < BPE_MERGES:
@@ -1475,9 +1472,6 @@ def _gd_train_weights(feat: DataFrame) -> list[tuple[int, float, float, float]]:
             F.sum((err * F.col("x2")).cast("decimal(28,10)")).alias("s2"),
             F.sum((err * F.col("x3")).cast("decimal(28,10)")).alias("s3"),
         )
-        from binwatch_spark import plancap
-
-        plancap.capture("gd_train.round", sums_df)
         sums = sums_df.first()
         w1 = w1 - GD_LR * (2.0 * float(sums["s1"]) / n)
         w2 = w2 - GD_LR * (2.0 * float(sums["s2"]) / n)

@@ -1,5 +1,5 @@
-"""One-command evidence pipeline (VERDICT r05 #6): regenerate every piece
-of per-round evidence a judge re-checks, with one JSON summary at the end.
+"""One-command evidence pipeline: re-check correctness, tests and the
+bench, with one JSON summary at the end.
 
 Runs, in order:
 0. ``tools/gen_query_index.py`` — regenerates README/SURVEY/docs/QUERIES.md
@@ -9,14 +9,13 @@ Runs, in order:
    doesn't work);
 1. ``tools/oracle_check.py`` over the FULL query registry at sf0.01 —
    driver-strength hash compare of every Spark query vs its DuckDB oracle
-   (writes ``CORRECTNESS_local_r{N}.json`` when ``--round N`` is given,
-   else ``/tmp/oracle_check.json``);
+   (writes ``/tmp/oracle_check.json``, outside the repository);
 2. ``pytest tests/ -q`` — the full suite;
 3. ``python bench.py`` at $SPARK_GRAFT_SF_DIR (default sf0.1) — refreshes
    ``BENCH_local.json`` (per-run GC/CPU attribution included).
 
 Usage:
-    python tools/verify_all.py [--round N] [--skip-bench] [--sf DIR]
+    python tools/verify_all.py [--skip-bench] [--sf DIR]
 
 Prints one JSON line:
     {"oracle": {"green": G, "total": T}, "pytest": {"rc": 0, "tail": ...},
@@ -64,8 +63,6 @@ def run(cmd: list[str], env: dict | None = None) -> tuple[int, str]:
 
 def main() -> int:
     ap = argparse.ArgumentParser()
-    ap.add_argument("--round", type=int, default=None,
-                    help="write CORRECTNESS_local_r{N}.json in-repo")
     ap.add_argument("--skip-bench", action="store_true")
     ap.add_argument("--sf", default="/root/testdata/sf0.01",
                     help="sf dir for the oracle check (driver uses sf0.01)")
@@ -90,11 +87,7 @@ def main() -> int:
                 "regenerated docs:\n" + diff + "\n"
             )
 
-    oracle_out = (
-        os.path.join(REPO, f"CORRECTNESS_local_r{args.round:02d}.json")
-        if args.round is not None
-        else "/tmp/oracle_check.json"
-    )
+    oracle_out = "/tmp/oracle_check.json"
     rc, tail = run(
         [sys.executable, "tools/oracle_check.py", args.sf],
         env={"ORACLE_CHECK_OUT": oracle_out},
