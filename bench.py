@@ -19,6 +19,10 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 from binwatch_spark.plans import all_queries  # noqa: E402
 from binwatch_spark.session import get_spark  # noqa: E402
 
+# The full-precision record of the last run (outside the repository, so a
+# run leaves the working tree clean); tools/verify_all.py reads it.
+BENCH_RECORD = "/tmp/BENCH_local.json"
+
 
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -217,7 +221,7 @@ def main() -> None:
     # with ~70 queries a pretty-printed line overflows the tail window and
     # truncates at the FRONT (an early record arrived with parsed=null). Keep the
     # line as short as possible (compact separators, 2-decimal per-query
-    # times) and ALSO write the full-precision result to BENCH_local.json so
+    # times) and ALSO write the full-precision result to BENCH_RECORD so
     # the artifact survives any capture truncation.
     # Surface run-to-run spread in the printed artifact (VERDICT r05 #7):
     # any query whose max/min run ratio exceeds 3× is listed so a GC pause
@@ -358,16 +362,13 @@ def main() -> None:
         "iowait_cpu_total": iowait_cpu_total,
         "contended": bool(other_cpu_total > 0.1 * max(session_cpu_total, 1e-9)),
         "index_build_split": index_build_split,
-        # repeat-anomaly tripwires (full per-run detail in BENCH_local.json)
+        # repeat-anomaly tripwires (full per-run detail in BENCH_RECORD)
         "median_outliers": median_outliers,
         "anomalous_run_causes": sorted(
             {e["cause"] for es in anomalous_runs.values() for e in es}
         ),
     }
-    with open(
-        os.path.join(os.path.dirname(os.path.abspath(__file__)), "BENCH_local.json"),
-        "w",
-    ) as fh:
+    with open(BENCH_RECORD, "w") as fh:
         json.dump(
             {
                 **result,

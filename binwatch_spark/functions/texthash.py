@@ -108,11 +108,11 @@ _MINHASH_B_COL = np.array(MINHASH_B, dtype=np.int64)[:, None]
 
 def make_minhash_sig_udf():
     """Arrow-vectorized MinHash signature: array<string> tokens → array<bigint>
-    of MINHASH_K values. Same affine-permutation math as minhash_col (all
-    int64, max |A*h+B| < 2^63, exact) — the HOF form is kept as the spec and
-    for SQL generation; this form exists because Catalyst's project collapse
-    would otherwise inline the token-hash array into all K signature columns
-    and re-run the interpreted per-char fold K times per row."""
+    of MINHASH_K values. Same affine-permutation math as minhash_sql, the
+    oracles' DuckDB spelling (all int64, max |A*h+B| < 2^63, exact). The
+    dedup operators key with the fused make_minhash_band_udf instead; this
+    unfolded form is the collision-free reference tools/audit_band_caps.py
+    measures the int64 band fold against."""
     @F.pandas_udf("array<bigint>")
     def minhash_sig(tokens: pd.Series) -> pd.Series:
         def sig(ts):
@@ -361,14 +361,6 @@ def make_polyhash_udf():
         return pd.Series(out, dtype="object")
 
     return ph
-
-
-def minhash_col(token_hashes: Column, i: int) -> Column:
-    """i-th MinHash value over an array<bigint> of token hashes."""
-    a, b = MINHASH_A[i], MINHASH_B[i]
-    return F.array_min(
-        F.transform(token_hashes, lambda h: (F.lit(a) * h + F.lit(b)) % POLY_PRIME)
-    )
 
 
 def minhash_sql(hashes_expr: str, i: int) -> str:

@@ -25,11 +25,9 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from binwatch_spark.functions.texthash import (
-    BAND_ROWS,
-    MINHASH_K,
     N_BANDS,
     SIMHASH_BITS,
-    minhash_col,
+    make_minhash_band_udf,
     polyhash,
 )
 from binwatch_spark.operators.text import char_shingles, distinct_tokens
@@ -48,7 +46,7 @@ from binwatch_spark.tables import spread
 # Index-probe hot-bucket cap: band keys with more than this many member
 # docs in the band table are excluded from candidate generation (the
 # standard production LSH guard against degenerate buckets; see the
-# incremental_dedup_with_index docstring for the measured r10 motivation).
+# comment in incremental_dedup_with_index for the measured r10 motivation).
 # Spelled identically in the q107/q122 oracles (HAVING count(*) <= cap),
 # so the rule is hash-checked end-to-end.
 #
@@ -230,36 +228,29 @@ def jaccard_pairs(
     return pairs.select("i", "j", jac.alias("jac")).filter(F.col("jac") >= threshold)
 
 
-def minhash_signatures(
-    df: DataFrame, text_col: str, id_col: str, tokenizer=distinct_tokens
+def _band_keyed(
+    frame: DataFrame, id_col: str, band_keys: Column, *carry: Column
 ) -> DataFrame:
-    """MinHash signature columns mh0..mh{K-1} per document (map-side only).
-
-    The K values come from one Arrow-vectorized kernel returning an
-    array<bigint> (make_minhash_sig_udf) rather than K minhash_col
-    expressions: Catalyst's project collapse inlines shared subexpressions,
-    so the HOF form re-evaluates the per-char token-hash fold K times per
-    row; the UDF is extracted into a single ArrowEvalPython node and the
-    mh{i} columns are plain array indexing."""
-    from binwatch_spark.functions.texthash import make_minhash_sig_udf
-
-    sig_udf = make_minhash_sig_udf()
-    sigs = _with_token_sets(spread(df, id_col), text_col, tokenizer).withColumn(
-        "_sig", sig_udf(F.col("_toks"))
+    """(id, *carry, bk0..bk{N_BANDS-1}) from an array<bigint> band-key
+    column (make_minhash_band_udf or make_shingle_minhash_band_udf) — the
+    one band keyer every LSH stage and the dedup index share, so the band
+    layout can never fork."""
+    return frame.withColumn("_bks", band_keys).select(
+        F.col(id_col),
+        *carry,
+        *[F.col("_bks")[b].alias(f"bk{b}") for b in range(N_BANDS)],
     )
-    sig_cols = [F.col("_sig")[i].alias(f"mh{i}") for i in range(MINHASH_K)]
-    return sigs.select(F.col(id_col), F.col("_toks"), *sig_cols)
 
 
 def _band_exploded(
-    frame: DataFrame, id_col: str, out_id: str, prefix: str
+    keyed: DataFrame, id_col: str, out_id: str, prefix: str
 ) -> DataFrame:
     """(id, bk0..bk{N-1}) → one row per (doc, band): (out_id, {prefix}0..,
     band_idx, band_key), each row carrying the doc's FULL key vector so
-    the first-collision predicate can be evaluated join-side. The single
-    spelling shared by the self-join/cross-frame candidate generator and
-    the materialized index writer — the band layout must never fork."""
-    return frame.select(
+    the first-collision predicate can be evaluated join-side. Readers that
+    need only (out_id, band_idx, band_key) — the dedup index and its
+    probe — select those and Spark prunes the carried vector."""
+    return keyed.select(
         F.col(id_col).alias(out_id),
         *[F.col(f"bk{b}").alias(f"{prefix}{b}") for b in range(N_BANDS)],
         F.posexplode(
@@ -283,13 +274,10 @@ def _first_collision_cond() -> Column:
 
 
 def _band_candidate_pairs(
-    keyed: DataFrame,
-    id_col: str,
-    persist: bool = True,
-    other: DataFrame | None = None,
-    key_cap: int | None = None,
+    keyed: DataFrame, id_col: str, persist: bool = True
 ) -> DataFrame:
-    """Candidate (i, j) pairs from a band-keyed frame (id + bk0..bk{N-1}).
+    """Candidate (i, j) pairs, i < j, from a band-keyed frame (id +
+    bk0..bk{N-1}).
 
     Explode to (band_idx, band_key) and self-join on the band key — the
     canonical LSH bucket join, ONE shuffle. Each exploded row also carries
@@ -305,53 +293,11 @@ def _band_candidate_pairs(
     twice (a bounds probe plus the verify join) and persists; a
     single-consumer caller (lsh_recall_audit's fused verify) passes False
     so the candidate blocks aren't pinned in executor storage for
-    nothing.
-
-    ``other``: cross-frame form (incremental dedup, q107) — candidates are
-    (i FROM keyed, j FROM other) instead of a self-join; the two id spaces
-    are assumed DISJOINT, so the i < j order filter is dropped and
-    first-collision uniqueness alone guarantees one emission per pair.
-
-    ``key_cap``: hot-bucket guard for the cross-frame form (see
-    BAND_KEY_CAP / the incremental_dedup_with_index docstring for the
-    measured r10 motivation): band keys held by more than ``key_cap``
-    docs on the ``other`` (corpus) side are excluded from candidate
-    generation — the same stated rule the q107/q122 oracles spell. Under
-    the cap, first-collision uniqueness is no longer sound (a pair's
-    FIRST collision may sit in an excluded hot band while a later cold
-    band still qualifies it), so the capped path deduplicates pairs with
-    a plain distinct — affordable exactly because the cap removed the
-    degenerate candidate mass a distinct used to be too expensive for."""
-
-    a_side = _band_exploded(keyed, id_col, "i", "ak")
-    b_side = _band_exploded(
-        other if other is not None else keyed, id_col, "j", "jk"
-    )
-    if key_cap is not None and other is not None:
-        a_slim = a_side.select("i", "band_idx", "band_key")
-        b_slim = b_side.select("j", "band_idx", "band_key")
-        hot = (
-            b_slim.groupBy("band_idx", "band_key")
-            .count()
-            .filter(F.col("count") > key_cap)
-            .select("band_idx", "band_key")
-        )
-        cold_b = b_slim.join(
-            F.broadcast(hot), ["band_idx", "band_key"], "left_anti"
-        )
-        out = (
-            a_slim.join(cold_b, ["band_idx", "band_key"])
-            .select("i", "j")
-            .dropDuplicates(["i", "j"])
-        )
-        return out.persist() if persist else out
-    first_collision = _first_collision_cond()
-    cond = first_collision if other is not None else (
-        (F.col("i") < F.col("j")) & first_collision
-    )
+    nothing."""
     out = (
-        a_side.join(b_side, ["band_idx", "band_key"])
-        .filter(cond)
+        _band_exploded(keyed, id_col, "i", "ak")
+        .join(_band_exploded(keyed, id_col, "j", "jk"), ["band_idx", "band_key"])
+        .filter((F.col("i") < F.col("j")) & _first_collision_cond())
         .select("i", "j")
     )
     return out.persist() if persist else out
@@ -369,50 +315,32 @@ def minhash_lsh_pairs(
 ) -> DataFrame:
     """Near-dup pairs via MinHash banding + exact Jaccard verification.
 
-    Bands hash BAND_ROWS-row slices of the signature; documents sharing any
-    band key become candidates (one shuffle on the small (band_idx,
-    band_key) pair), then candidates are verified with exact Jaccard — no
-    false positives, banded recall ≈ 0.95 at the 0.8 threshold (→1 above
-    0.85; see the banding-parameter note in functions.texthash).
-    Output: (i, j, jac) with i < j.
+    Bands fold BAND_ROWS-row slices of the signature to one int64 key;
+    documents sharing any band key become candidates (one shuffle on the
+    small (band_idx, band_key) pair), then candidates are verified with
+    exact Jaccard — no false positives, banded recall ≈ 0.95 at the 0.8
+    threshold (→1 above 0.85; see the banding-parameter note in
+    functions.texthash). Output: (i, j, jac) with i < j.
 
-    band_fn: optional fused Column->Column producing the N_BANDS int64 band
-    keys straight from the input column (make_minhash_band_udf over the
-    tokenized column, make_shingle_minhash_band_udf over raw text) — the
-    preferred form: the K signature values never leave the kernel, so the
-    plan has no K-column extraction or re-hash stage at all.
+    band_fn: fused Column->Column producing the N_BANDS int64 band keys
+    straight from the input column; the default is make_minhash_band_udf
+    over ``tokenizer(text)``, and the shingle rung passes its text kernel
+    (make_shingle_minhash_band_udf). The K signature values never leave
+    the kernel, so the plan has no K-column extraction or re-hash stage.
     """
-    if band_fn is not None:
-        keyed_src = spread(df, id_col).withColumn("_bks", band_fn(F.col(text_col)))
-        keyed_cols = [F.col("_bks")[b].alias(f"bk{b}") for b in range(N_BANDS)]
-        sigs = None
-    else:
-        sigs = minhash_signatures(df, text_col, id_col, tokenizer)
-    # Materialize the signature table: it feeds both sides of the candidate
+    text = F.col(text_col)
+    band_keys = (
+        band_fn(text)
+        if band_fn is not None
+        else make_minhash_band_udf()(tokenizer(text))
+    )
+    # Materialize the band-key table: it feeds both sides of the candidate
     # self-join (aliasing defeats exchange reuse), and at real scale an LSH
     # pipeline persists its signature table for exactly this reason. Tiny:
     # (id, N_BANDS keys) per document. Eager count so concurrent join
     # stages don't race to fill the lazy cache (each recomputing the UDF
-    # pipeline; observed 43 s vs 11 s at sf0.1). Each BAND_ROWS-row slice
-    # is collapsed to ONE bigint with xxhash64 (JVM codegen, variadic over
-    # the row columns): the bucket join shuffles 8 bytes per band instead
-    # of the 8-int slice (8× narrower rows through the exchange, and the
-    # first-collision conjunction below becomes integer compares instead
-    # of array compares). Hash-equality candidates are a superset only on
-    # 64-bit collisions (~2^-64); exact-Jaccard verification removes any
-    # such false positive, so the verified output is unchanged.
-    if band_fn is not None:
-        keyed = keyed_src.select(F.col(id_col), *keyed_cols).persist()
-    else:
-        keyed = sigs.select(
-            F.col(id_col),
-            *[
-                F.xxhash64(
-                    *[F.col(f"mh{b * BAND_ROWS + r}") for r in range(BAND_ROWS)]
-                ).alias(f"bk{b}")
-                for b in range(N_BANDS)
-            ],
-        ).persist()
+    # pipeline; observed 43 s vs 11 s at sf0.1).
+    keyed = _band_keyed(spread(df, id_col), id_col, band_keys).persist()
     keyed.count()
     cands = _band_candidate_pairs(keyed, id_col)
 
@@ -1170,18 +1098,12 @@ def lsh_recall_audit(
         # composition (exact_jaccard_allpairs + minhash_lsh_pairs) runs
         # the tokenizer and its persist/probe job chain once PER SIDE —
         # measured 3.4× slower on the sf0.1 panel.
-        from binwatch_spark.functions.texthash import make_minhash_band_udf
-
-        band_udf = make_minhash_band_udf()
-        keyed = (
-            toks_df.withColumn("_bks", band_udf(F.col("_toks")))
-            .select(
-                F.col(id_col),
-                _mask_expr(F.col("_toks"), vocab).alias("_mask"),
-                *[F.col("_bks")[b].alias(f"bk{b}") for b in range(N_BANDS)],
-            )
-            .persist()
-        )
+        keyed = _band_keyed(
+            toks_df,
+            id_col,
+            make_minhash_band_udf()(F.col("_toks")),
+            _mask_expr(F.col("_toks"), vocab).alias("_mask"),
+        ).persist()
         keyed.count()
         m_i = keyed.select(F.col(id_col).alias("i"), F.col("_mask").alias("_mi"))
         m_j = keyed.select(F.col(id_col).alias("j"), F.col("_mask").alias("_mj"))
@@ -1273,17 +1195,14 @@ def build_dedup_index(
     prefix: str = "dedup_index",
     num_buckets: int = 16,
 ) -> tuple[str, str]:
-    """Materialize the corpus dedup INDEX the incremental path (q107's
-    semantics) joins against — the at-rest artifact that lets a crawl
-    delta dedup WITHOUT re-scanning or re-hashing the corpus:
+    """Materialize the corpus dedup INDEX that incremental_dedup_with_index
+    probes — the at-rest artifact that lets a crawl delta dedup WITHOUT
+    re-scanning or re-hashing the corpus:
 
     - ``{prefix}_digest``: (digest sha256, keeper_doc_id), bucketed on
       digest — the exact-dup lookup;
-    - ``{prefix}_bands``: one row per (doc, band) with the band key AND
-      the doc's full band-key vector (bk0..bk{N-1}), bucketed+sorted on
-      band_key — the near-dup candidate index. Carrying the vector costs
-      N_BANDS×8 B per row and buys first-collision uniqueness at READ
-      time: candidates need no distinct stage (see _band_candidate_pairs).
+    - ``{prefix}_bands``: (doc_id, band_idx, band_key), one row per (doc,
+      band), bucketed+sorted on band_key — the near-dup candidate index.
 
     At 100 TB both writes are one pass over the corpus (digest is a
     map-side expression; band keys are the fused Arrow kernel) plus the
@@ -1294,7 +1213,7 @@ def build_dedup_index(
     from binwatch_spark.operators.storage import write_bucketed
 
     t0 = time.perf_counter()
-    digest, exploded = _index_frames(docs, text_col, id_col)
+    digest, bands = _index_frames(docs, text_col, id_col)
     # clear_stale_location: the index namespace is owned by this builder
     # and rebuilt wholesale — safe to clear a leftover from a dead session.
     # The two table writes are independent jobs over different shuffles —
@@ -1308,7 +1227,7 @@ def build_dedup_index(
             num_buckets, clear_stale_location=True,
         )
         fb = pool.submit(
-            write_bucketed, exploded, f"{prefix}_bands", "band_key",
+            write_bucketed, bands, f"{prefix}_bands", "band_key",
             num_buckets, clear_stale_location=True,
         )
         fd.result()
@@ -1317,29 +1236,29 @@ def build_dedup_index(
     return f"{prefix}_digest", f"{prefix}_bands"
 
 
+def _band_rows(docs: DataFrame, text_col: str, id_col: str) -> DataFrame:
+    """(doc_id, band_idx, band_key), one row per (doc, band): the stored
+    band-table layout, and the incoming side of its probe."""
+    keyed = _band_keyed(
+        spread(docs, id_col),
+        id_col,
+        make_minhash_band_udf()(distinct_tokens(F.col(text_col))),
+    )
+    return _band_exploded(keyed, id_col, "doc_id", "bk").select(
+        "doc_id", "band_idx", "band_key"
+    )
+
+
 def _index_frames(
     docs: DataFrame, text_col: str, id_col: str
 ) -> tuple[DataFrame, DataFrame]:
-    """The two index-table frames (digest, exploded bands) for a doc set —
-    ONE construction shared by build and append so the stored layouts can
-    never drift. Stored band rows use the canonical _band_exploded layout
-    with keys kept under their bk* names; the reader only renames bk→jk."""
-    from binwatch_spark.functions.texthash import make_minhash_band_udf
-    from binwatch_spark.operators.text import distinct_tokens
-
+    """The two index frames (digest, bands) for a doc set — ONE
+    construction shared by build, append and q107's in-plan probe, so the
+    stored layouts can never drift."""
     digest = docs.groupBy(
         F.sha2(F.col(text_col), 256).alias("digest")
     ).agg(F.min(id_col).alias("keeper_doc_id"))
-
-    band_udf = make_minhash_band_udf()
-    keyed = spread(docs, id_col).select(
-        F.col(id_col),
-        band_udf(distinct_tokens(F.col(text_col))).alias("_bks"),
-    ).select(
-        F.col(id_col),
-        *[F.col("_bks")[b].alias(f"bk{b}") for b in range(N_BANDS)],
-    )
-    return digest, _band_exploded(keyed, id_col, "doc_id", "bk")
+    return digest, _band_rows(docs, text_col, id_col)
 
 
 def update_dedup_index(
@@ -1375,7 +1294,7 @@ def update_dedup_index(
     src = new_docs.persist()
     src.count()
     try:
-        digest, exploded = _index_frames(src, text_col, id_col)
+        digest, bands = _index_frames(src, text_col, id_col)
         from concurrent.futures import ThreadPoolExecutor
 
         with ThreadPoolExecutor(max_workers=2) as pool:
@@ -1384,7 +1303,7 @@ def update_dedup_index(
                 num_buckets, mode="append",
             )
             fb = pool.submit(
-                write_bucketed, exploded, f"{prefix}_bands", "band_key",
+                write_bucketed, bands, f"{prefix}_bands", "band_key",
                 num_buckets, mode="append",
             )
             fd.result()
@@ -1397,39 +1316,29 @@ def update_dedup_index(
 def incremental_dedup_with_index(
     new_docs: DataFrame,
     corpus_docs: DataFrame,
-    spark,
+    digests: DataFrame,
+    bands: DataFrame,
     text_col: str,
     id_col: str,
     threshold: float,
-    prefix: str = "dedup_index",
 ) -> DataFrame:
-    """Dedup an incoming batch against a PRE-BUILT index
-    (build_dedup_index): exact via the bucketed digest table, near via the
-    bucketed band table + exact-Jaccard verify against the corpus fetched
-    BY ID — the corpus is touched only for verified candidates' rows,
-    never scanned for hashing. Output: (doc_id, verdict, match_doc_id)
-    with q107's exact-precedence semantics.
+    """Dedup an incoming batch against a corpus dedup index given as its
+    two frames in the _index_frames layout: ``digests`` (digest,
+    keeper_doc_id) finds exact dups, ``bands`` (doc_id, band_idx,
+    band_key) yields near-dup candidates, and candidates are verified by
+    exact Jaccard against ``corpus_docs`` fetched BY ID — the corpus is
+    never scanned for hashing. Output: (id, verdict, match_doc_id) with
+    exact precedence: 'drop_exact' when the sha256 matches a corpus doc,
+    else 'drop_near' when a candidate's Jaccard >= threshold, else
+    'keep'; match_doc_id is the smallest matching corpus doc.
 
-    Scale: the digest probe joins 32-byte keys against a bucketed table
-    (stored side exchange-free); candidates come from the (band_idx,
-    band_key) equi-join against the bucketed band table with
-    first-collision uniqueness read off the STORED key vectors (no
-    distinct); the verify join fetches candidate corpus rows by id."""
-    from binwatch_spark.functions.texthash import make_minhash_band_udf
-    from binwatch_spark.operators.text import distinct_tokens
-
-    band_udf = make_minhash_band_udf()
-    new_keyed = spread(new_docs, id_col).select(
-        F.col(id_col),
-        band_udf(distinct_tokens(F.col(text_col))).alias("_bks"),
-    ).select(
-        F.col(id_col),
-        *[F.col("_bks")[b].alias(f"bk{b}") for b in range(N_BANDS)],
+    The one cross-frame probe: q107 passes _index_frames(corpus) built in
+    the same plan; q118 and q122 pass spark.table() of the bucketed tables
+    build_dedup_index/update_dedup_index maintain."""
+    new_bands = _band_rows(new_docs, text_col, id_col).withColumnRenamed(
+        "doc_id", "i"
     )
-    new_exploded = _band_exploded(new_keyed, id_col, "i", "ak").select(
-        "i", "band_idx", "band_key"
-    )
-    index_bands = spark.table(f"{prefix}_bands").select(
+    index_bands = bands.select(
         F.col("doc_id").alias("j"), "band_idx", "band_key"
     )
     # HOT-BUCKET CAP (the standard production LSH guard, r10 scale
@@ -1447,9 +1356,9 @@ def incremental_dedup_with_index(
     # count runs against the CURRENT band table, so index appends
     # (update_dedup_index) move keys across the cap exactly as the
     # oracle's recomputed view does. With hot keys gone the candidate
-    # volume is small enough that a plain per-pair distinct replaces the
-    # first-collision trick (whose earlier-band predicate would need
-    # per-band hotness to stay correct under the cap).
+    # volume is small enough that a plain per-pair distinct dedups the
+    # pairs (first-collision uniqueness would need per-band hotness to
+    # stay correct under the cap).
     hot = (
         index_bands.groupBy("band_idx", "band_key")
         .count()
@@ -1460,7 +1369,7 @@ def incremental_dedup_with_index(
         F.broadcast(hot), ["band_idx", "band_key"], "left_anti"
     )
     cands = (
-        new_exploded.join(cold_index, ["band_idx", "band_key"])
+        new_bands.join(cold_index, ["band_idx", "band_key"])
         .select("i", "j")
         .dropDuplicates(["i", "j"])
     )
@@ -1487,7 +1396,7 @@ def incremental_dedup_with_index(
     # silently duplicating output rows.
     exact = (
         new_docs.select(id_col, F.sha2(F.col(text_col), 256).alias("digest"))
-        .join(spark.table(f"{prefix}_digest"), "digest")
+        .join(digests, "digest")
         .groupBy(id_col)
         .agg(F.min("keeper_doc_id").alias("_exact"))
     )

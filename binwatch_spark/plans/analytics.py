@@ -297,17 +297,7 @@ def _q42_pairs(docs: DataFrame) -> DataFrame:
         return dedup.jaccard_pairs(
             docs, "text", "doc_id", "source", JACCARD_THRESHOLD
         )
-    from binwatch_spark.functions.texthash import make_minhash_band_udf
-    from binwatch_spark.operators.text import distinct_tokens
-
-    band_udf = make_minhash_band_udf()
-    return dedup.minhash_lsh_pairs(
-        docs,
-        "text",
-        "doc_id",
-        JACCARD_THRESHOLD,
-        band_fn=lambda c: band_udf(distinct_tokens(c)),
-    )
+    return dedup.minhash_lsh_pairs(docs, "text", "doc_id", JACCARD_THRESHOLD)
 
 
 @register("q42_dedup_clusters", oracle=_Q42_SQL)

@@ -71,18 +71,8 @@ def q23_minhash_lsh_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     exact-Jaccard verification — the 100 TB near-dup path: signatures are
     map-side (fused tokens→band-keys kernel, one int64 per band), the only
     shuffle is the small (band_idx, band_key) exchange."""
-    from binwatch_spark.functions.texthash import make_minhash_band_udf
-    from binwatch_spark.operators.text import distinct_tokens
-
-    band_udf = make_minhash_band_udf()
     docs = load(spark, sf_dir, "documents")
-    return dedup.minhash_lsh_pairs(
-        docs,
-        "text",
-        "doc_id",
-        JACCARD_THRESHOLD,
-        band_fn=lambda c: band_udf(distinct_tokens(c)),
-    )
+    return dedup.minhash_lsh_pairs(docs, "text", "doc_id", JACCARD_THRESHOLD)
 
 
 @register(
@@ -1021,10 +1011,11 @@ def q107_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     matching corpus doc (exact precedence).
 
     Scale shape: the corpus side is touched exactly the way a persisted
-    dedup INDEX would be — a digest table (32-byte keys) and a MinHash
-    band table ((band_idx, int64 key) rows, q23's fused map-side kernel);
-    in production both are bucketed storage (operators/storage.py) and the
-    incoming batch joins them WITHOUT a corpus scan. Candidates come from
+    dedup INDEX would be — a digest frame (32-byte keys) and a MinHash
+    band frame ((band_idx, int64 key) rows, q23's fused map-side kernel),
+    both from dedup._index_frames — and the probe is
+    dedup.incremental_dedup_with_index, the same one q118/q122 run on the
+    stored, bucketed index tables. Candidates come from
     the cross-frame band equi-join (never all-pairs) under the
     HOT-BUCKET CAP (dedup.BAND_KEY_CAP, r10 scale-decade finding: hot
     band keys made the uncapped join O(n²) on this vocabulary — 356M
@@ -1034,98 +1025,12 @@ def q107_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     the exact-Jaccard verify; all joins are keyed. The oracle recomputes
     the identical two-sided band index in SQL, so the whole incremental
     path — cap included — is hash-checked."""
-    from binwatch_spark.functions.texthash import make_minhash_band_udf
-    from binwatch_spark.operators.text import distinct_tokens
-    from binwatch_spark.tables import spread
-
-    band_udf = make_minhash_band_udf()
     docs = load(spark, sf_dir, "documents")
     corpus = docs.filter(F.col("doc_id") % INCR_MOD != 0)
     incoming = docs.filter(F.col("doc_id") % INCR_MOD == 0)
-
-    def band_keyed(frame: DataFrame) -> DataFrame:
-        keyed = spread(frame, "doc_id").select(
-            "doc_id", band_udf(distinct_tokens(F.col("text"))).alias("_bks")
-        )
-        return keyed.select(
-            "doc_id",
-            *[F.col("_bks")[b].alias(f"bk{b}") for b in range(N_BANDS)],
-        )
-
-    # Cross-frame band join under the hot-bucket cap (BAND_KEY_CAP — the
-    # r10 scale finding: the fixture's 31-token vocabulary collapses band
-    # keys onto a few thousand hot values whose candidate mass grows
-    # quadratically with corpus size; keys above the cap are excluded BY
-    # THE SAME STATED RULE the oracle's coldk CTE spells, so the probe
-    # cost is bounded by cap × probe bands instead of O(n²)).
-    cands = dedup._band_candidate_pairs(
-        band_keyed(incoming), "doc_id", persist=False,
-        other=band_keyed(corpus), key_cap=dedup.BAND_KEY_CAP,
-    )
-    # Verify: q23's two-tier rule. Under a ≤63-word global vocabulary the
-    # token sets collapse to int64 bitmasks and the Jaccard is popcount —
-    # whole-stage-codegen integer work (the fixture's dense band collisions
-    # make the verify the dominant stage: 4.6 s → mask path cuts the
-    # interpreted array_intersect out of every candidate pair). Larger
-    # vocabularies verify with the array expressions, identical math.
-    toks_df = (
-        dedup._with_token_sets(spread(docs, "doc_id"), "text")
-        .select("doc_id", "_toks")
-        .persist()
-    )
-    toks_df.count()
-    vocab = dedup._small_vocab_from_toks(toks_df)
-    if vocab is not None:
-        sets = toks_df.select(
-            "doc_id", dedup._mask_expr(F.col("_toks"), vocab).alias("_m")
-        )
-        ti = sets.filter(F.col("doc_id") % INCR_MOD == 0).select(
-            F.col("doc_id").alias("i"), F.col("_m").alias("_mi")
-        )
-        tj = sets.filter(F.col("doc_id") % INCR_MOD != 0).select(
-            F.col("doc_id").alias("j"), F.col("_m").alias("_mj")
-        )
-        jac_ok = (
-            dedup._mask_jaccard(F.col("_mi"), F.col("_mj"))
-            >= JACCARD_THRESHOLD
-        )
-    else:
-        ti = toks_df.filter(F.col("doc_id") % INCR_MOD == 0).select(
-            F.col("doc_id").alias("i"), F.col("_toks").alias("_ti")
-        )
-        tj = toks_df.filter(F.col("doc_id") % INCR_MOD != 0).select(
-            F.col("doc_id").alias("j"), F.col("_toks").alias("_tj")
-        )
-        inter = F.size(F.array_intersect(F.col("_ti"), F.col("_tj")))
-        union_sz = F.size("_ti") + F.size("_tj") - inter
-        jac_ok = inter.cast("double") / union_sz >= JACCARD_THRESHOLD
-    near = (
-        cands.join(ti, "i")
-        .join(tj, "j")
-        .filter(jac_ok)
-        .groupBy(F.col("i").alias("doc_id"))
-        .agg(F.min("j").alias("_near"))
-    )
-    cdig = corpus.groupBy(F.sha2(F.col("text"), 256).alias("_dig")).agg(
-        F.min("doc_id").alias("_exact")
-    )
-    exact = (
-        incoming.select("doc_id", F.sha2(F.col("text"), 256).alias("_dig"))
-        .join(cdig, "_dig")
-        .select("doc_id", "_exact")
-    )
-    return (
-        incoming.select("doc_id")
-        .join(exact, "doc_id", "left")
-        .join(near, "doc_id", "left")
-        .select(
-            "doc_id",
-            F.when(F.col("_exact").isNotNull(), F.lit("drop_exact"))
-            .when(F.col("_near").isNotNull(), F.lit("drop_near"))
-            .otherwise(F.lit("keep"))
-            .alias("verdict"),
-            F.coalesce(F.col("_exact"), F.col("_near")).alias("match_doc_id"),
-        )
+    digests, bands = dedup._index_frames(corpus, "text", "doc_id")
+    return dedup.incremental_dedup_with_index(
+        incoming, corpus, digests, bands, "text", "doc_id", JACCARD_THRESHOLD
     )
 
 
@@ -1137,7 +1042,7 @@ def q118_stream_index_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     digest table + bucketed (band_idx, key) band table), then each
     arriving micro-batch is probed against it inside foreachBatch
     (incremental_dedup_with_index: digest join for exact dups, band
-    equi-join with first-collision uniqueness for near candidates, exact
+    equi-join under the hot-bucket cap for near candidates, exact
     Jaccard verify fetching corpus rows BY ID) and the per-doc verdicts
     (keep / drop_exact / drop_near, with the matched corpus doc) are
     appended downstream. q107 is this exact semantics as one batch query;
@@ -1153,8 +1058,8 @@ def q118_stream_index_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: the probe side is delta-sized; the digest probe joins 32-byte
     keys against the bucketed table (stored side exchange-free); band
-    candidates come from the bucketed band table with stored key vectors
-    (no distinct); only verified candidates touch corpus text."""
+    candidates come from the bucketed (doc_id, band_idx, band_key) table;
+    only candidates touch corpus text."""
     from binwatch_spark.operators.dedup import (
         build_dedup_index,
         incremental_dedup_with_index,
@@ -1168,8 +1073,9 @@ def q118_stream_index_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     incoming = docs.filter(F.col("doc_id") % INCR_MOD == 0).select(
         "doc_id", "text"
     )
-    prefix = "q118_dedup_index"
-    build_dedup_index(corpus, "text", "doc_id", prefix=prefix)
+    digest_t, bands_t = build_dedup_index(
+        corpus, "text", "doc_id", prefix="q118_dedup_index"
+    )
     first = incoming.filter(F.col("doc_id") % 10 == 0)
     second = incoming.filter(F.col("doc_id") % 10 != 0)
 
@@ -1177,11 +1083,11 @@ def q118_stream_index_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         return incremental_dedup_with_index(
             batch_df,
             corpus,
-            spark,
+            spark.table(digest_t),
+            spark.table(bands_t),
             "text",
             "doc_id",
             JACCARD_THRESHOLD,
-            prefix=prefix,
         )
 
     return _run_bounded_stream_foreach(
@@ -1244,9 +1150,17 @@ def q122_index_update_loop(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.col("doc_id") % INCR_MOD == 0) & (F.col("doc_id") % 10 != 0)
     )
     prefix = "q122_dedup_index"
-    build_dedup_index(corpus0, "text", "doc_id", prefix=prefix)
+    digest_t, bands_t = build_dedup_index(
+        corpus0, "text", "doc_id", prefix=prefix
+    )
     verd_b_lazy = incremental_dedup_with_index(
-        b, corpus0, spark, "text", "doc_id", JACCARD_THRESHOLD, prefix=prefix
+        b,
+        corpus0,
+        spark.table(digest_t),
+        spark.table(bands_t),
+        "text",
+        "doc_id",
+        JACCARD_THRESHOLD,
     )
     # The spill must outlive this call (the returned DataFrame reads it
     # lazily), so removal is deferred to interpreter exit — without it a
@@ -1267,14 +1181,15 @@ def q122_index_update_loop(spark: SparkSession, sf_dir: str) -> DataFrame:
         verd_b.filter(F.col("verdict") == "keep").select("doc_id"), "doc_id"
     )
     update_dedup_index(keep_b, "text", "doc_id", prefix=prefix)
+    # resolved after the append, so C probes the updated index
     verd_c = incremental_dedup_with_index(
         c,
         corpus0.unionByName(keep_b),
-        spark,
+        spark.table(digest_t),
+        spark.table(bands_t),
         "text",
         "doc_id",
         JACCARD_THRESHOLD,
-        prefix=prefix,
     )
     return verd_b.withColumn("batch", F.lit("b0")).unionByName(
         verd_c.withColumn("batch", F.lit("b1"))

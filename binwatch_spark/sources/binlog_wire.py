@@ -71,6 +71,7 @@ DELETE_ROWS_EVENT_V2 = 0x20
 GTID_LOG_EVENT = 0x21
 ANONYMOUS_GTID_LOG_EVENT = 0x22
 PREVIOUS_GTIDS_LOG_EVENT = 0x23
+TRANSACTION_PAYLOAD_EVENT = 0x28
 
 # column wire type codes (enum_field_types)
 MYSQL_TYPE_TINY = 1
@@ -692,6 +693,17 @@ class WireBinLogStreamReader:
             return QueryEvent(text.decode("utf-8", "replace"))
         if etype == HEARTBEAT_LOG_EVENT:
             return HeartbeatEvent()
+        if etype == TRANSACTION_PAYLOAD_EVENT:
+            # Its row events are zstd-compressed and there is no decoder
+            # here. Skipping it would advance the position past rows that
+            # were never delivered; not an OSError, so the reconnect loop
+            # does not retry a fault that every retry would hit again.
+            raise NotImplementedError(
+                "TRANSACTION_PAYLOAD event (type 40) at "
+                f"{self.log_file}:{log_pos}: compressed transactions are "
+                "not decoded by the wire client; set "
+                "binlog_transaction_compression=OFF on the server"
+            )
         return None  # PREVIOUS_GTIDS / STOP / unknown: position-only
 
     def __iter__(self) -> Iterator[WireEvent]:

@@ -132,7 +132,10 @@ def _sprig_empty(v: Any) -> bool:
 
 def _printf(fmt: str, *args: Any) -> str:
     """Minimal Go fmt.Sprintf: %v %s %d %f %q %% (no width/precision —
-    unsupported verbs raise at render time)."""
+    unsupported verbs raise at render time). An argument-count mismatch
+    renders as Go's does instead of failing the render: a verb without
+    an operand as ``%!d(MISSING)``, surplus operands appended as
+    ``%!(EXTRA string=USERS)``."""
     out: list[str] = []
     i = 0
     argi = 0
@@ -145,7 +148,8 @@ def _printf(fmt: str, *args: Any) -> str:
                 out.append("%")
                 continue
             if argi >= len(args):
-                raise ValueError(f"printf: missing argument for %{verb}")
+                out.append(f"%!{verb}(MISSING)")
+                continue
             a = args[argi]
             argi += 1
             if verb in ("v", "s"):
@@ -161,6 +165,12 @@ def _printf(fmt: str, *args: Any) -> str:
             continue
         out.append(ch)
         i += 1
+    if argi < len(args):
+        extra = ", ".join(
+            "<nil>" if a is None else f"{_type_of(a)}={_go_str(a)}"
+            for a in args[argi:]
+        )
+        out.append(f"%!(EXTRA {extra})")
     return "".join(out)
 
 
@@ -1591,7 +1601,7 @@ def _const(value: Any):
     return lambda item, rng: value
 
 
-def _compile_operand(t: str):
+def _compile_operand(t: str, seeded_random: bool):
     if t == ".":
         return lambda item, rng: item
     if _FIELD_RE.match(t):
@@ -1607,8 +1617,7 @@ def _compile_operand(t: str):
     m = _PAREN_RE.match(t) if t.startswith("(") else None
     if not m:
         raise ValueError(f"unsupported template operand: {t!r}")
-    # the seeded random family is admitted only outside parentheses
-    sub = _compile_pipeline(m.group(1))
+    sub = _compile_pipeline(m.group(1), seeded_random)
     fields = tuple(p for p in m.group(2).split(".") if p)
     if not fields:
         return sub
@@ -1649,7 +1658,9 @@ def _compile_segment(seg: str, expr: str, piped: bool, seeded_random: bool):
             )
         fn = _SEEDED_RANDOM[head]
         # the render's RNG is the seeded functions' first argument
-        args = [_rng_arg] + [_compile_operand(t) for t in rest]
+        args = [_rng_arg] + [
+            _compile_operand(t, seeded_random) for t in rest
+        ]
     else:
         if head in _EXCLUDED_SPRIG:
             hint = (
@@ -1667,7 +1678,7 @@ def _compile_segment(seg: str, expr: str, piped: bool, seeded_random: bool):
         if head not in _FUNCS:
             if rest:
                 raise ValueError(f"unsupported template expression: {{{{ {seg} }}}}")
-            operand = _compile_operand(head)
+            operand = _compile_operand(head, seeded_random)
             if piped:
                 raise ValueError(f"cannot pipe into operand {head!r}")
             return operand
@@ -1677,7 +1688,7 @@ def _compile_segment(seg: str, expr: str, piped: bool, seeded_random: bool):
                 f" {_MIN_ARITY[head]} got {n_args}"
             )
         fn = _FUNCS[head]
-        args = [_compile_operand(t) for t in rest]
+        args = [_compile_operand(t, seeded_random) for t in rest]
     if piped:
         return lambda item, rng, value: fn(*[a(item, rng) for a in args], value)
     return lambda item, rng: fn(*[a(item, rng) for a in args])

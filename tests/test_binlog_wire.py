@@ -18,6 +18,7 @@ import pytest
 
 from binwatch_spark.sources.binlog import BinlogLocation, MySQLBinlogClient
 from binwatch_spark.sources.binlog_wire import (
+    TRANSACTION_PAYLOAD_EVENT,
     WireProtocolError,
     master_status,
 )
@@ -369,3 +370,35 @@ def test_wire_er1236_refusal_is_client_visible():
             )
         assert exc_info.value.args[0] == 1236
         assert "anonymous" in str(exc_info.value).lower()
+
+
+def test_wire_compressed_transaction_fails_loudly():
+    """A TRANSACTION_PAYLOAD event (binlog_transaction_compression=ON)
+    carries zstd-compressed rows the client cannot decode: read_range
+    must raise, naming the event and the server setting, instead of
+    stepping past it — and must not retry it as a wire fault, nor yield
+    any row after it."""
+    s = BinlogScript(file="mysql-bin.000001", checksum="CRC32")
+    s.add_table_map("shop", "users", USERS_COLS)
+    s.add_write_rows("shop", "users", USERS_COLS, [{"id": 1, "name": "a"}])
+    s.add_xid(1)
+    s._emit(TRANSACTION_PAYLOAD_EVENT, bytes(16))
+    s.add_table_map("shop", "users", USERS_COLS)
+    s.add_write_rows("shop", "users", USERS_COLS, [{"id": 2, "name": "b"}])
+    s.add_xid(2)
+    got = []
+    with FakeMySQLServer(
+        s, info_schema=USERS_INFO, dump_plans=[{}] * 3
+    ) as srv:
+        tip = s.events[-1]
+        with pytest.raises(NotImplementedError) as exc_info:
+            for record in _client(srv.port).read_range(
+                BinlogLocation("mysql-bin.000001", 4),
+                BinlogLocation(tip[0], tip[1]),
+            ):
+                got.append(record)
+        assert len(srv.dump_requests) == 1
+    msg = str(exc_info.value)
+    assert "TRANSACTION_PAYLOAD" in msg
+    assert "binlog_transaction_compression" in msg
+    assert [r["rows"][0]["id"] for r in got] == ["1"]

@@ -132,42 +132,6 @@ def test_lsh_recall_audit_large_vocab_fallback(spark):
         )
 
 
-def test_band_candidate_pairs_cross_frame_unique_and_complete(spark):
-    """Cross-frame form (q107): every (incoming, corpus) pair sharing at
-    least one band key is emitted EXACTLY once — including pairs that
-    collide in all N_BANDS bands (first-collision uniqueness must hold
-    without the self-join's i<j filter) — and nothing else is."""
-    from binwatch_spark.functions.texthash import N_BANDS
-    from binwatch_spark.operators.dedup import _band_candidate_pairs
-
-    cols = "doc_id bigint, " + ", ".join(
-        f"bk{b} bigint" for b in range(N_BANDS)
-    )
-    a = spark.createDataFrame(
-        [
-            tuple([1] + [10] * N_BANDS),          # collides with 101 everywhere
-            tuple([2] + [20] * N_BANDS),          # collides with nothing
-            tuple([3] + [100 + b for b in range(N_BANDS)]),  # band0=100 → 103
-        ],
-        cols,
-    )
-    b = spark.createDataFrame(
-        [
-            tuple([101] + [10] * N_BANDS),
-            tuple([102] + [99] * N_BANDS),
-            tuple([103] + [100] + [777] * (N_BANDS - 1)),
-        ],
-        cols,
-    )
-    got = sorted(
-        tuple(r)
-        for r in _band_candidate_pairs(
-            a, "doc_id", persist=False, other=b
-        ).collect()
-    )
-    assert got == [(1, 101), (3, 103)]
-
-
 def test_index_update_loop_drops_against_appended_keepers(spark):
     """update_dedup_index's append must make LATER batches dedup against
     EARLIER batches' keepers (the q122 loop) — the fixture corpus never
@@ -204,11 +168,14 @@ def test_index_update_loop_drops_against_appended_keepers(spark):
     # non-default bucket count on purpose: the append below must carry the
     # SAME spec or Spark rejects the bucketed-table append (regression:
     # update_dedup_index once hardcoded 16)
-    build_dedup_index(corpus, "text", "doc_id", prefix=prefix, num_buckets=4)
+    dig_t, bands_t = build_dedup_index(
+        corpus, "text", "doc_id", prefix=prefix, num_buckets=4
+    )
     verd_b = {
         r["doc_id"]: (r["verdict"], r["match_doc_id"])
         for r in incremental_dedup_with_index(
-            b, corpus, spark, "text", "doc_id", 0.8, prefix=prefix
+            b, corpus, spark.table(dig_t), spark.table(bands_t),
+            "text", "doc_id", 0.8,
         ).collect()
     }
     assert verd_b == {10: ("keep", None), 20: ("drop_exact", 1)}
@@ -220,11 +187,11 @@ def test_index_update_loop_drops_against_appended_keepers(spark):
         for r in incremental_dedup_with_index(
             c,
             corpus.unionByName(keep_b),
-            spark,
+            spark.table(dig_t),
+            spark.table(bands_t),
             "text",
             "doc_id",
             0.8,
-            prefix=prefix,
         ).collect()
     }
     assert verd_c == {
@@ -278,11 +245,14 @@ def test_hot_bucket_cap_suppresses_degenerate_candidates(spark, monkeypatch):
         schema,
     )
     prefix = "t_idx_hotcap"
-    build_dedup_index(corpus, "text", "doc_id", prefix=prefix, num_buckets=4)
+    dig_t, bands_t = build_dedup_index(
+        corpus, "text", "doc_id", prefix=prefix, num_buckets=4
+    )
     verd = {
         r["doc_id"]: (r["verdict"], r["match_doc_id"])
         for r in incremental_dedup_with_index(
-            incoming, corpus, spark, "text", "doc_id", 0.8, prefix=prefix
+            incoming, corpus, spark.table(dig_t), spark.table(bands_t),
+            "text", "doc_id", 0.8,
         ).collect()
     }
     assert verd == {

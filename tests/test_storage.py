@@ -185,9 +185,10 @@ def test_compact_uri_escapable_dir(spark, tmp_path):
 def test_dedup_index_build_and_incremental_probe(spark, tmp_path):
     """The materialized dedup index end-to-end: build digest + band tables
     (bucketed) over the corpus split, then dedup the incoming split
-    against the INDEX — verdicts must match q107's in-memory
-    implementation exactly, and the candidate probe must read the stored
-    band-key vectors (no distinct stage, no corpus re-hash)."""
+    against the stored INDEX tables — verdicts must match q107, which
+    runs the same probe on in-plan index frames, exactly; the stored band
+    table holds only the (doc_id, band_idx, band_key) rows the probe
+    reads."""
     from pyspark.sql import functions as F
 
     from binwatch_spark.operators.dedup import (
@@ -211,12 +212,13 @@ def test_dedup_index_build_and_incremental_probe(spark, tmp_path):
     )
     assert spark.table(dig_t).count() > 0
     assert spark.table(bands_t).count() == corpus.count() * 16  # N_BANDS rows
+    assert spark.table(bands_t).columns == ["doc_id", "band_idx", "band_key"]
 
     got = {
         r["doc_id"]: (r["verdict"], r["match_doc_id"])
         for r in incremental_dedup_with_index(
-            incoming, corpus, spark, "text", "doc_id", JACCARD_THRESHOLD,
-            prefix="t_didx",
+            incoming, corpus, spark.table(dig_t), spark.table(bands_t),
+            "text", "doc_id", JACCARD_THRESHOLD,
         ).collect()
     }
     want = {

@@ -3,6 +3,8 @@ template renderer (the documented template surface, tmpl.go/docs parity)."""
 
 from __future__ import annotations
 
+import re
+
 import pytest
 
 from binwatch_spark.config import ConfigError, expand_env, parse
@@ -148,6 +150,20 @@ def test_template_printf():
     assert out == "mysql-bin.000001/4"
     # piped value appends as the LAST printf argument (Go pipe semantics)
     assert compile_template('{{ .Data.Table | printf "t=%s" }}')(ITEM) == "t=users"
+
+
+def test_template_printf_argument_count_mismatch_renders_like_go():
+    """Go's fmt renders an operand-count mismatch into the output instead
+    of failing: a render error would abort and retry the whole batch."""
+    assert (
+        compile_template('{{ printf "%s-%d" "t" 42 "USERS" }}')(ITEM)
+        == "t-42%!(EXTRA string=USERS)"
+    )
+    assert compile_template('{{ printf "%s-%d" "t" }}')(ITEM) == "t-%!d(MISSING)"
+    assert (
+        compile_template('{{ printf "%s" "a" "b" nil }}')(ITEM)
+        == "a%!(EXTRA string=b, <nil>)"
+    )
 
 
 def test_template_yaml_json_round_trip():
@@ -1091,6 +1107,16 @@ def test_seeded_random_off_by_default_with_hint():
         compile_template("{{ uuidv4 }}")
     with pytest.raises(ValueError, match="crypto"):
         compile_template("{{ genPrivateKey }}", seeded_random=True)
+
+
+def test_seeded_random_reaches_parenthesised_sub_pipelines():
+    render = compile_template("{{ (randAlpha 3) | upper }}", seeded_random=True)
+    item = {"ItemID": 1, "Log": {"BinlogFile": "f.1", "BinlogPosition": 4}}
+    out = render(item)
+    assert re.fullmatch(r"[A-Z]{3}", out)
+    assert render(item) == out
+    with pytest.raises(ValueError, match="seededRandom"):
+        compile_template("{{ (randAlpha 3) | upper }}")
 
 
 def test_seeded_random_route_config_roundtrip():

@@ -12,7 +12,8 @@ Runs, in order:
    (writes ``/tmp/oracle_check.json``, outside the repository);
 2. ``pytest tests/ -q`` — the full suite;
 3. ``python bench.py`` at $SPARK_GRAFT_SF_DIR (default sf0.1) — refreshes
-   ``BENCH_local.json`` (per-run GC/CPU attribution included).
+   ``/tmp/BENCH_local.json`` (bench.BENCH_RECORD; per-run GC/CPU
+   attribution included).
 
 Usage:
     python tools/verify_all.py [--skip-bench] [--sf DIR]
@@ -35,6 +36,8 @@ import subprocess
 import sys
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+# bench.BENCH_RECORD: where bench.py writes its full record
+BENCH_RECORD = "/tmp/BENCH_local.json"
 
 
 def run(cmd: list[str], env: dict | None = None) -> tuple[int, str]:
@@ -120,7 +123,7 @@ def main() -> int:
         rc, _ = run([sys.executable, "bench.py"])
         bench: dict = {}
         try:
-            with open(os.path.join(REPO, "BENCH_local.json")) as fh:
+            with open(BENCH_RECORD) as fh:
                 b = json.load(fh)
             bench = {
                 "value": b.get("value"),
