@@ -1219,15 +1219,20 @@ def build_dedup_index(
     # The two table writes are independent jobs over different shuffles —
     # submitted concurrently (guide §2.6) so the second write's scan/
     # shuffle back-fills the first's task tail instead of waiting for it.
+    # inheritable_thread_target carries the caller's local properties (job
+    # group, scheduler pool) and tags onto the worker threads' jobs.
     from concurrent.futures import ThreadPoolExecutor
 
+    from pyspark import inheritable_thread_target
+
+    inherit = inheritable_thread_target(docs.sparkSession)
     with ThreadPoolExecutor(max_workers=2) as pool:
         fd = pool.submit(
-            write_bucketed, digest, f"{prefix}_digest", "digest",
+            inherit(write_bucketed), digest, f"{prefix}_digest", "digest",
             num_buckets, clear_stale_location=True,
         )
         fb = pool.submit(
-            write_bucketed, bands, f"{prefix}_bands", "band_key",
+            inherit(write_bucketed), bands, f"{prefix}_bands", "band_key",
             num_buckets, clear_stale_location=True,
         )
         fd.result()
@@ -1297,13 +1302,16 @@ def update_dedup_index(
         digest, bands = _index_frames(src, text_col, id_col)
         from concurrent.futures import ThreadPoolExecutor
 
+        from pyspark import inheritable_thread_target
+
+        inherit = inheritable_thread_target(src.sparkSession)
         with ThreadPoolExecutor(max_workers=2) as pool:
             fd = pool.submit(
-                write_bucketed, digest, f"{prefix}_digest", "digest",
+                inherit(write_bucketed), digest, f"{prefix}_digest", "digest",
                 num_buckets, mode="append",
             )
             fb = pool.submit(
-                write_bucketed, bands, f"{prefix}_bands", "band_key",
+                inherit(write_bucketed), bands, f"{prefix}_bands", "band_key",
                 num_buckets, mode="append",
             )
             fd.result()

@@ -26,22 +26,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from binwatch_spark.functions.texthash import EMBED_DIM, lsh_bucket
-
-# Dimension cutover for the deterministic numeric kernels (q98 centroid
-# update, q148 power iteration): below this, per-dimension expressions are
-# unrolled — O(dim) codegen nodes, zero row expansion, fastest at the
-# fixture's dim 64; at/above it, the LONG-FORM rung takes over (posexplode
-# to (pos, value) rows + ONE hash aggregate grouped by pos) so expression
-# count stays O(1) regardless of dim. Production embedding dims (768–4096)
-# would otherwise build 10⁵–10⁷ codegen nodes and blow Janino's 64 KB
-# method limit / the constant pool. The two rungs are BIT-IDENTICAL, not
-# approximately equal: per-row terms are the same IEEE doubles and the
-# per-dimension accumulations run in DECIMAL(28,10) (exact, order-free) or
-# under the contract's round(6) quantization — tests/test_wide_dim.py pins
-# equality at dim 64 and oracle-exactness at dim 512/2048. Same gating
-# idiom as the LSH and driver-CC cutovers.
-WIDE_DIM_CUTOVER = 256
+from binwatch_spark.functions.texthash import lsh_bucket
 
 
 def _dot(x: Column, y: Column) -> Column:
@@ -77,10 +62,6 @@ def _pair_dot_udf(xs: pd.Series, ys: pd.Series) -> pd.Series:
     for d in range(a.shape[1]):
         acc = acc + a[:, d] * b[:, d]
     return pd.Series(acc)
-
-
-def _pair_dot(x: Column, y: Column, dim: int) -> Column:
-    return _pair_dot_udf(x, y)
 
 
 def cosine(a: Column, b: Column) -> Column:
@@ -156,7 +137,7 @@ def brute_force_knn(
     q = _prep(queries, q_emb)
     c = _prep(candidates, c_emb)
     pairs = c.crossJoin(F.broadcast(q))
-    sim = _pair_dot(F.col(q_emb), F.col(c_emb), EMBED_DIM) / (
+    sim = _pair_dot_udf(F.col(q_emb), F.col(c_emb)) / (
         F.col(f"_norm_{q_emb}") * F.col(f"_norm_{c_emb}")
     )
     return _topk(pairs, sim, k, query_id, cand_id)
@@ -199,7 +180,7 @@ def lsh_knn(
         q = q.withColumn("_bucket", F.explode(probes))
     c = _prep(candidates, c_emb, with_bucket=True)
     pairs = c.join(F.broadcast(q), on="_bucket")
-    sim = _pair_dot(F.col(q_emb), F.col(c_emb), EMBED_DIM) / (
+    sim = _pair_dot_udf(F.col(q_emb), F.col(c_emb)) / (
         F.col(f"_norm_{q_emb}") * F.col(f"_norm_{c_emb}")
     )
     return _topk(pairs, sim, k, query_id, cand_id)
@@ -307,7 +288,7 @@ def ivf_knn(
     c = _assign_cells(_prep(candidates, c_emb), cand_id, c_emb, cent_bc, 1)
     q = _assign_cells(_prep(queries, q_emb), query_id, q_emb, cent_bc, n_probe)
     pairs = c.join(F.broadcast(q), on="_cid")
-    sim = _pair_dot(F.col(q_emb), F.col(c_emb), EMBED_DIM) / (
+    sim = _pair_dot_udf(F.col(q_emb), F.col(c_emb)) / (
         F.col(f"_norm_{q_emb}") * F.col(f"_norm_{c_emb}")
     )
     return _topk(pairs, sim, k, query_id, cand_id)
@@ -476,7 +457,7 @@ def neardup_pairs_lsh(
     ej = base.select(
         F.col("_id").alias("j"), F.col("_emb").alias("_ej"), F.col("_norm").alias("_nj")
     )
-    sim = _pair_dot(F.col("_ei"), F.col("_ej"), EMBED_DIM) / (
+    sim = _pair_dot_udf(F.col("_ei"), F.col("_ej")) / (
         F.col("_ni") * F.col("_nj")
     )
     return (
@@ -570,7 +551,7 @@ def neardup_pairs_lsh_multitable(
     ej = base.select(
         F.col("_id").alias("j"), F.col("_emb").alias("_ej"), F.col("_norm").alias("_nj")
     )
-    sim = _pair_dot(F.col("_ei"), F.col("_ej"), EMBED_DIM) / (
+    sim = _pair_dot_udf(F.col("_ei"), F.col("_ej")) / (
         F.col("_ni") * F.col("_nj")
     )
     return (
@@ -621,7 +602,6 @@ def kmeans_lloyd_rounds(
     vec_col: str,
     stride: int,
     rounds: int = 2,
-    dim: int = EMBED_DIM,
 ) -> DataFrame:
     """Distributed Lloyd's k-means for a FIXED number of rounds with
     deterministic stride seeding (cent_id = vec_id of every stride-th
@@ -632,8 +612,12 @@ def kmeans_lloyd_rounds(
     driver-coordinated iteration in every production implementation), the
     assignment is ONE map-side Arrow kernel per round over the closure-
     shipped centroid matrix (no pair join, no pair shuffle — the n·k
-    arithmetic happens inside the kernel), and the update is one hash
-    aggregate whose exchange carries k·dim partial sums per task.
+    arithmetic happens inside the kernel), and the update is posexplode to
+    (cell, pos, x) rows plus ONE hash aggregate grouped by (cell, pos),
+    whose exchange carries k·dim partial sums per task. Neither stage
+    spells centroid values into the plan (they travel as closure data and
+    collected rows), the update's codegen is O(1) at any dim, and the
+    dimension is whatever the collected positions span.
 
     Determinism contract (the whole point — this makes an ITERATIVE ML
     loop oracle-checkable): the kernel accumulates the n·k dot products
@@ -704,44 +688,23 @@ def kmeans_lloyd_rounds(
         assigned = assign_with(cent_rows)
         if rnd == rounds - 1:
             break
-        if dim >= WIDE_DIM_CUTOVER:
-            # Long-form rung: the unrolled update builds dim avg aggregates
-            # (2·dim-field buffer — past Janino limits at production dims);
-            # here ONE hash aggregate on (cell, pos) collects k·dim long
-            # rows — the same driver state the centroid matrix already is.
-            # round(avg, 6) is the identical contract quantization, so the
-            # different partial-summation grouping is absorbed exactly as
-            # the unrolled rung's is (test_wide_dim pins rung equality).
-            update_df = (
-                assigned.select(
-                    F.col("_a.cell_id").alias("_cid"),
-                    F.posexplode(F.col("_e")).alias("_pos", "_xv"),
-                )
-                .groupBy("_cid", "_pos")
-                .agg(F.round(F.avg("_xv"), 6).alias("_c"))
+        # round(avg, 6) is the contract quantization: it absorbs the
+        # partial-aggregation summation order, so the rebuilt centroids
+        # match the oracle's round(avg(emb[i]), 6) exactly.
+        update_df = (
+            assigned.select(
+                F.col("_a.cell_id").alias("_cid"),
+                F.posexplode(F.col("_e")).alias("_pos", "_xv"),
             )
-            long_rows = update_df.collect()
-            by_cid: dict = {}
-            for lr in long_rows:
-                by_cid.setdefault(lr["_cid"], {})[lr["_pos"]] = lr["_c"]
-            cent_rows = sorted(
-                (cid, [m[i] for i in range(dim)])
-                for cid, m in by_cid.items()
-            )
-        else:
-            # centroid update built as ONE parsed SQL aggregate: the
-            # per-dimension Column loop cost ~0.3 s of driver py4j time per
-            # round (r13 profiling — same pathology as the PCA rounds);
-            # round(avg(element_at(..)), 6) is the identical expression.
-            arr = ",".join(
-                f"round(avg(element_at(_e, {i + 1})), 6)" for i in range(dim)
-            )
-            update_df = assigned.groupBy(
-                F.col("_a.cell_id").alias("_cid")
-            ).agg(F.expr(f"array({arr})").alias("_c"))
-            cent_rows = sorted(
-                (r[0], r[1]) for r in update_df.collect()
-            )
+            .groupBy("_cid", "_pos")
+            .agg(F.round(F.avg("_xv"), 6).alias("_c"))
+        )
+        by_cid: dict = {}
+        for lr in update_df.collect():
+            by_cid.setdefault(lr["_cid"], {})[lr["_pos"]] = lr["_c"]
+        cent_rows = sorted(
+            (cid, [m[i] for i in range(len(m))]) for cid, m in by_cid.items()
+        )
     return assigned.select(
         F.col(id_col),
         F.col("_a.cell_id").alias("cell_id"),
@@ -753,93 +716,50 @@ def power_iteration_rounds(
     emb: DataFrame,
     vec_col: str,
     rounds: int,
-    dim: int = EMBED_DIM,
-    wide: bool | None = None,
+    dim: int,
 ) -> list[tuple]:
     """Distributed power iteration for the top principal direction — the
-    q148 kernel, factored so the per-round aggregation has TWO bit-identical
-    rungs gated by dim (see WIDE_DIM_CUTOVER):
+    q148 kernel. Each round projects s = x·v with a zip_with/aggregate
+    fold (HOFs are CodegenFallback — a runtime loop, O(1) codegen at any
+    dim; the 0.0-seeded left fold is the same IEEE chain as the oracle's
+    list_dot_product), then posexplodes to (pos, x_d) and runs ONE hash
+    aggregate grouped by pos over ``cast(s·x_d as decimal(28,10))`` — the
+    shuffle carries dim partial rows per task.
 
-    - narrow (dim < cutover): the per-row projection s = x·v is built ONCE
-      as a projected column (O(dim) codegen nodes — NOT re-inlined into
-      every per-dimension sum, which was O(dim²)), then dim decimal sums
-      ``sum(cast(s·x_d as decimal(28,10)))`` in one aggregate.
-    - wide (dim ≥ cutover): s via a zip_with/aggregate fold (HOFs are
-      CodegenFallback — runtime loop, O(1) codegen regardless of dim;
-      the 0.0-seeded left fold is the same IEEE chain as the unrolled
-      ascending sum — ``0.0 + t0 == t0`` except for a -0.0 whose sign dies
-      in the decimal cast), then posexplode to (pos, x_d) and ONE hash
-      aggregate grouped by pos — O(1) aggregate expressions at any dim,
-      shuffle carries dim partial rows per task.
-
-    Both rungs produce the same DECIMAL(28,10) per-dimension totals
-    (decimal addition is exact and order-free), so the emitted rounds are
-    bit-identical across rungs and against the DuckDB oracle. Driver state
-    is O(dim) — the direction vector; each round is one map-side-combined
-    pass (the standard distributed power-iteration shape; the Gram matrix
-    is never materialized). Returns [(round, norm, c0, c1, c2, c3)].
+    Decimal addition is exact and order-free, so the per-dimension totals,
+    and with them every emitted round, are bit-identical to the DuckDB
+    oracle. Driver state is O(dim) — the direction vector, whose starting
+    value ``dim`` sizes; each round is one map-side-combined pass (the
+    standard distributed power-iteration shape; the Gram matrix is never
+    materialized). Returns [(round, norm, c0, c1, c2, c3)].
     """
-    if wide is None:
-        wide = dim >= WIDE_DIM_CUTOVER
     import math
 
     v = [1.0] + [0.0] * (dim - 1)
     rows: list[tuple] = []
     for r in range(1, rounds + 1):
-        if wide:
-            varr = F.array(*[F.lit(float(c)) for c in v])
-            s = F.aggregate(
-                F.zip_with(
-                    F.col(vec_col), varr, lambda p, q: p.cast("double") * q
-                ),
-                F.lit(0.0),
-                lambda acc, t: acc + t,
+        varr = F.array(*[F.lit(float(c)) for c in v])
+        s = F.aggregate(
+            F.zip_with(F.col(vec_col), varr, lambda p, q: p.cast("double") * q),
+            F.lit(0.0),
+            lambda acc, t: acc + t,
+        )
+        round_df = (
+            emb.select(
+                s.alias("_s"),
+                F.posexplode(F.col(vec_col)).alias("_pos", "_xv"),
             )
-            round_df = (
-                emb.select(
-                    s.alias("_s"),
-                    F.posexplode(F.col(vec_col)).alias("_pos", "_xv"),
-                )
-                .groupBy("_pos")
-                .agg(
-                    F.sum(
-                        (F.col("_s") * F.col("_xv").cast("double")).cast(
-                            "decimal(28,10)"
-                        )
-                    ).alias("_u")
-                )
+            .groupBy("_pos")
+            .agg(
+                F.sum(
+                    (F.col("_s") * F.col("_xv").cast("double")).cast(
+                        "decimal(28,10)"
+                    )
+                ).alias("_u")
             )
-            long_rows = round_df.collect()
-            by_pos = {lr["_pos"]: lr["_u"] for lr in long_rows}
-            u = [float(by_pos[i]) for i in range(dim)]
-        else:
-            # Both round stages are built as SQL strings (ONE selectExpr
-            # py4j call each) instead of 64 Column-object loops: profiling
-            # the r13 round showed ~1.0 s per round of pure DRIVER-PYTHON
-            # expression construction (hundreds of py4j round trips for the
-            # 64-term dot + 64 aggregates) against 0.02 s of Catalyst
-            # planning and ~0.6 s of execution; the string build is ~0.05 s.
-            # The parsed expression trees are identical — element_at cast to
-            # double times a double literal (repr() is shortest-round-trip,
-            # and Spark's `<repr>D` literal parses back to the exact same
-            # IEEE double), summed in the same ascending order — so every
-            # emitted round stays bit-identical.
-            dot_sql = " + ".join(
-                f"CAST(element_at({vec_col}, {i + 1}) AS DOUBLE) * {v[i]!r}D"
-                for i in range(dim)
-            )
-            proj = emb.selectExpr(
-                f"({dot_sql}) AS _s", f"{vec_col} AS _x"
-            )
-            sums_df = proj.selectExpr(
-                *[
-                    "sum(CAST((_s * CAST(element_at(_x, "
-                    f"{i + 1}) AS DOUBLE)) AS DECIMAL(28,10))) AS u{i}"
-                    for i in range(dim)
-                ]
-            )
-            sums = sums_df.first()
-            u = [float(sums[f"u{i}"]) for i in range(dim)]
+        )
+        by_pos = {lr["_pos"]: lr["_u"] for lr in round_df.collect()}
+        u = [float(by_pos[i]) for i in range(dim)]
         nrm_sq = 0.0
         for i in range(dim):
             nrm_sq = nrm_sq + u[i] * u[i]

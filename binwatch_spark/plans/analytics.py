@@ -245,7 +245,7 @@ def q57_length_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
 # q42's exact pair rung is Θ(n²/B) within metadata blocks BY ALGORITHM —
 # past this corpus size the registered query gates itself onto the banded
 # MinHash-LSH rung (the q23 pair generator), the same in-plan cutover
-# pattern as WIDE_DIM_CUTOVER and the jaccard_pairs hot-block gate. The
+# pattern as the jaccard_pairs hot-block gate. The
 # ORACLE spells the identical gate (both branches in one statement, the
 # dead branch's base CTE filtered empty by the same count), so the query
 # stays hash-exact on WHICHEVER side of the gate the data lands.

@@ -578,6 +578,15 @@ def _run_bounded_stream_foreach(spark, prefix, stages, probe) -> DataFrame:
     return _bounded_stream_core(spark, prefix, stages, start, schema_cell)
 
 
+# Wall-clock cap on one bounded stream run. 300 s covers every query at
+# sf0.01/sf0.1 with 10x headroom, so a run that hits it is a hang or a
+# regression, not a cap to raise. When it fires, Spark's stop() interrupt
+# can surface as a secondary java.lang.StackOverflowError from the stream
+# thread's exception-classification regex; the timeout is the primary
+# failure, not that stack trace.
+STREAM_TIMEOUT_S = 300
+
+
 def _bounded_stream_core(spark, prefix, stages, start, schema_cell=None) -> DataFrame:
     """One copy of the bounded-stream scaffolding (staging writes, one-file-
     per-trigger source, scoped shuffle partitions, 300s await, cleanup) —
@@ -606,12 +615,16 @@ def _bounded_stream_core(spark, prefix, stages, start, schema_cell=None) -> Data
 
         from concurrent.futures import ThreadPoolExecutor
 
+        from pyspark import inheritable_thread_target
+
         with ThreadPoolExecutor(max_workers=min(4, len(stages))) as pool:
             futs = [
                 pool.submit(
-                    lambda df=df, name=name: df.coalesce(1)
-                    .write.mode("overwrite")
-                    .parquet(f"{src}/{name}")
+                    inheritable_thread_target(spark)(
+                        lambda df=df, name=name: df.coalesce(1)
+                        .write.mode("overwrite")
+                        .parquet(f"{src}/{name}")
+                    )
                 )
                 for name, df in stages
             ]
@@ -627,20 +640,13 @@ def _bounded_stream_core(spark, prefix, stages, start, schema_cell=None) -> Data
             .option("maxFilesPerTrigger", 1)
             .parquet(f"{src}/*")
         )
-        # 300 s covers every query at the driver's sf0.01/sf0.1 with 10x
-        # headroom; scale runs (tools/bench_scale.py at sf1.0+) raise it
-        # via env rather than masking a hang at the normal sizes. NOTE
-        # (r10): when this fires, Spark's stop() interrupt can surface as
-        # a secondary java.lang.StackOverflowError from the stream
-        # thread's exception-classification regex — the timeout below is
-        # the primary failure, not that stack trace.
-        timeout_s = int(os.environ.get("SPARK_GRAFT_STREAM_TIMEOUT", "300"))
         with _stream_shuffle_partitions(spark):
             q = start(stream, sink, ckpt)
-            if not q.awaitTermination(timeout_s):
+            if not q.awaitTermination(STREAM_TIMEOUT_S):
                 q.stop()
                 raise RuntimeError(
-                    f"bounded stream run did not finish within {timeout_s}s"
+                    "bounded stream run did not finish within "
+                    f"{STREAM_TIMEOUT_S}s"
                 )
     finally:
         shutil.rmtree(src, ignore_errors=True)
@@ -1377,13 +1383,18 @@ def q131_full_curation(spark: SparkSession, sf_dir: str) -> DataFrame:
     # quality/dedup chain over documents, but its k-means rounds collect
     # eagerly while being BUILT. Build it on a worker thread so its rounds
     # overlap the dedup chain's jobs (guide §2.6) instead of serializing
-    # after them; the result frame is joined exactly as before.
+    # after them; the result frame is joined exactly as before. The
+    # worker's jobs keep the caller's job group (inheritable_thread_target).
     from concurrent.futures import ThreadPoolExecutor
+
+    from pyspark import inheritable_thread_target
 
     _thin_pool = ThreadPoolExecutor(max_workers=1)
     thin_future = _thin_pool.submit(
-        lambda: q126_cluster_balanced_sample(spark, sf_dir).select(
-            F.col("vec_id").alias("doc_id")
+        inheritable_thread_target(spark)(
+            lambda: q126_cluster_balanced_sample(spark, sf_dir).select(
+                F.col("vec_id").alias("doc_id")
+            )
         )
     )
     passing = q64_quality_filter(spark, sf_dir).filter(F.col("passes")).select(

@@ -417,8 +417,8 @@ def _kmeans_sql(dim: int | None = None, stride: int | None = None) -> str:
     # contract: list_dot_product distances (sequential fold = the Spark
     # kernel's index-order accumulation), argmin ties on cent_id, round-1
     # centroids rounded to 6 dp before round 2. dim/stride parameterized so
-    # tests/test_wide_dim.py can pin the dim-512 long-form rung against the
-    # same oracle shape (the centroid list is O(dim) SQL terms — fine).
+    # tests/test_wide_dim.py can pin kmeans_lloyd_rounds at dim 512 against
+    # the same oracle shape (the centroid list is O(dim) SQL terms — fine).
     from binwatch_spark.functions.texthash import EMBED_DIM
 
     if dim is None:
@@ -611,10 +611,9 @@ def _semi_hard_tail(pairs: DataFrame) -> DataFrame:
     per-anchor top-NEG_K rank window (so WindowGroupLimit sees only
     in-band pairs). One definition — the exact panel and the ANN rung can
     never diverge on the band rule or the tie-break."""
-    from binwatch_spark.operators.similarity import _pair_dot
-    from binwatch_spark.functions.texthash import EMBED_DIM
+    from binwatch_spark.operators.similarity import _pair_dot_udf
 
-    sim = _pair_dot(F.col("q_emb"), F.col("c_emb"), EMBED_DIM) / (
+    sim = _pair_dot_udf(F.col("q_emb"), F.col("c_emb")) / (
         F.col("_norm_q_emb") * F.col("_norm_c_emb")
     )
     banded = pairs.select(
@@ -847,8 +846,7 @@ def q123_hybrid_retrieval(spark: SparkSession, sf_dir: str) -> DataFrame:
     100 TB the corpus-sized work is exactly q90's filtered-aggregate scan
     plus one map-side cosine pass — no full-corpus window, no cross join
     against anything unbounded."""
-    from binwatch_spark.functions.texthash import EMBED_DIM
-    from binwatch_spark.operators.similarity import _pair_dot, _prep
+    from binwatch_spark.operators.similarity import _pair_dot_udf, _prep
     from binwatch_spark.plans.text_queries import bm25_scores
 
     docs = load(spark, sf_dir, "documents").filter(F.col("doc_id") >= 1)
@@ -878,7 +876,7 @@ def q123_hybrid_retrieval(spark: SparkSession, sf_dir: str) -> DataFrame:
         ),
         "c_emb",
     )
-    sim = _pair_dot(F.col("q_emb"), F.col("c_emb"), EMBED_DIM) / (
+    sim = _pair_dot_udf(F.col("q_emb"), F.col("c_emb")) / (
         F.col("_norm_q_emb") * F.col("_norm_c_emb")
     )
     sem = (
@@ -1047,16 +1045,16 @@ def q148_embedding_pca_power(spark: SparkSession, sf_dir: str) -> DataFrame:
     before whitening/compression (PCA-projected vectors make both the
     ANN index and semantic dedup cheaper per dimension). Each round is
     ONE map-side-combined aggregation: per row the scalar projection
-    s = x·v against the driver-resident direction (a literal — the
-    q98/q145/q147 loop pattern, driver state O(dim), never O(data)),
+    s = x·v against the driver-resident direction (a literal array —
+    driver state O(dim), never O(data)),
     then per-dimension sums of s·x_d accumulate the un-normalized next
     direction u = Xᵀ(Xv); the driver normalizes. No shuffle ever carries
-    more than the 64 decimal partials per partition — at 100 TB each
+    more than the dim decimal partials per partition — at 100 TB each
     round is a single pass, the standard distributed power-iteration
     shape (and the Gram matrix is never materialized).
 
     Cross-engine float determinism, same contract as q147: per-row
-    expressions are IEEE-identical (the 64-term dot spelled in ascending
+    expressions are IEEE-identical (the dot folded in ascending
     dimension order on both engines, float32 loads cast to double —
     exact), per-dimension sums go through DECIMAL(28,10), and the
     normalization's sum-of-squares + sqrt + divides are spelled in the
@@ -1064,11 +1062,10 @@ def q148_embedding_pca_power(spark: SparkSession, sf_dir: str) -> DataFrame:
     round: the Rayleigh-style norm estimate and the 4 leading
     components, rounded past ulp-drift range.
 
-    Body: operators/similarity.power_iteration_rounds — dim-gated
-    (WIDE_DIM_CUTOVER) between the unrolled-expression rung used at the
-    fixture's dim 64 and the long-form posexplode rung that keeps codegen
-    O(1) at production dims (768–4096); the rungs are bit-identical
-    (tests/test_wide_dim.py)."""
+    Body: operators/similarity.power_iteration_rounds — a zip_with fold
+    for s and one posexplode aggregate grouped by dimension, so codegen
+    stays O(1) from the fixture's dim 64 to production dims (768–4096);
+    tests/test_wide_dim.py pins it oracle-exact at dim 512."""
     from binwatch_spark.functions.texthash import EMBED_DIM
     from binwatch_spark.operators.similarity import power_iteration_rounds
 

@@ -333,6 +333,14 @@ def run_pipeline(
 ):
     """Wire source → transforms → foreachBatch sink; returns the
     StreamingQuery. The checkpoint dir is the C1/C2 store."""
+    # _sequence_batch's unpartitioned window is deliberate (the single-task
+    # sort IS binlog order), so WindowExec's "No Partition Defined" warning
+    # on every trigger is noise. The logger gets its own config, which a
+    # later setLogLevel on the root leaves alone.
+    log4j = spark.sparkContext._jvm.org.apache.logging.log4j
+    log4j.core.config.Configurator.setLevel(
+        "org.apache.spark.sql.execution.window.WindowExec", log4j.Level.ERROR
+    )
     stream = envelope_transform(source_stream(spark, cfg), cfg)
     writer = (
         stream.writeStream.foreachBatch(make_batch_processor(cfg))

@@ -6,7 +6,6 @@ oracle regeneration, not as silent drift from the committed evidence."""
 # The gate values the committed CORRECTNESS/BENCH records assume.
 DEFAULTS = {
     "Q42_EXACT_MAX_DOCS": 20000,
-    "WIDE_DIM_CUTOVER": 256,
 }
 
 
@@ -25,14 +24,6 @@ def test_q42_gate_default_matches_committed_oracle():
         sql = oracles[q]
         assert f"<= {DEFAULTS['Q42_EXACT_MAX_DOCS']}" in sql, q
         assert f"> {DEFAULTS['Q42_EXACT_MAX_DOCS']}" in sql, q
-
-
-def test_wide_dim_cutover_default():
-    from binwatch_spark.operators import similarity
-
-    assert similarity.WIDE_DIM_CUTOVER == DEFAULTS[
-        "WIDE_DIM_CUTOVER"
-    ]
 
 
 def test_band_key_cap_is_the_oracle_spelled_constant():

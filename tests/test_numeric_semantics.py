@@ -97,7 +97,7 @@ def test_kmeans_rounds_match_numpy_lloyd(spark):
     got = {
         r["vec_id"]: (r["cell_id"], r["dist2"])
         for r in kmeans_lloyd_rounds(
-            df, "vec_id", "embedding", stride=10, rounds=2, dim=4
+            df, "vec_id", "embedding", stride=10, rounds=2
         ).collect()
     }
 

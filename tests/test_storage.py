@@ -229,3 +229,44 @@ def test_dedup_index_build_and_incremental_probe(spark, tmp_path):
     assert any(v[0] != "keep" for v in got.values())  # fixture has dups
     spark.sql("DROP TABLE IF EXISTS t_didx_digest")
     spark.sql("DROP TABLE IF EXISTS t_didx_bands")
+
+
+def test_dedup_index_build_jobs_keep_callers_job_group(spark):
+    """build_dedup_index submits its two bucketed writes from worker
+    threads; their jobs must still carry the caller's job group, which is
+    how per-query task and CPU attribution finds them. Every job started
+    between two marker jobs is checked, so a write that drops the group
+    shows up as an id outside it."""
+    from binwatch_spark.operators.dedup import build_dedup_index
+    from binwatch_spark.tables import load
+    from tests.conftest import SF_SMALL
+
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+
+    def marker(group: str) -> int:
+        sc.setJobGroup(group, group)
+        sc.parallelize([0], 1).count()
+        return max(tracker.getJobIdsForGroup(group))
+
+    spark.sql("DROP TABLE IF EXISTS t_jg_digest")
+    spark.sql("DROP TABLE IF EXISTS t_jg_bands")
+    docs = load(spark, SF_SMALL, "documents")
+    try:
+        first = marker("t-jg-before")
+        sc.setJobGroup("t-jg-build", "build_dedup_index")
+        build_dedup_index(docs, "text", "doc_id", prefix="t_jg", num_buckets=4)
+        last = marker("t-jg-after")
+    finally:
+        for key in (
+            "spark.jobGroup.id",
+            "spark.job.description",
+            "spark.job.interruptOnCancel",
+        ):
+            sc.setLocalProperty(key, None)
+        spark.sql("DROP TABLE IF EXISTS t_jg_digest")
+        spark.sql("DROP TABLE IF EXISTS t_jg_bands")
+    started = set(range(first + 1, last))
+    in_group = set(tracker.getJobIdsForGroup("t-jg-build"))
+    assert started, "build_dedup_index started no jobs"
+    assert started <= in_group, sorted(started - in_group)

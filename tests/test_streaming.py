@@ -1643,3 +1643,20 @@ def test_cli_shared_query_terminal_failure_exits_1(tmp_path):
         assert rc == 1
     finally:
         sink.shutdown()
+
+
+def test_pipeline_silences_sequencing_window_warning(spark, tmp_path):
+    """_sequence_batch's unpartitioned window is deliberate, so the relay
+    raises WindowExec's logger to ERROR instead of logging "No Partition
+    Defined for Window operation" on every trigger. The logger has its own
+    config, so a later setLogLevel on the root does not bring it back."""
+    tmp = str(tmp_path)
+    write_replay(f"{tmp}/replay", EVENTS)
+    run_until_done(spark, make_cfg(tmp))
+
+    name = "org.apache.spark.sql.execution.window.WindowExec"
+    log4j = spark.sparkContext._jvm.org.apache.logging.log4j
+    conf = log4j.LogManager.getContext(False).getConfiguration()
+    logger_conf = conf.getLoggerConfig(name)
+    assert logger_conf.getName() == name
+    assert logger_conf.getLevel().toString() == "ERROR"

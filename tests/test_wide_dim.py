@@ -3,26 +3,25 @@
 embedding dims past the fixture's 64 — production encoders emit 768–4096 —
 WITHOUT losing hash-exactness against their DuckDB oracles.
 
-The cliff being guarded: q148's original spelling re-inlined the dim-term
+The cliff being guarded: a per-dimension spelling re-inlines the dim-term
 dot into each of dim per-dimension sums (O(dim²) codegen nodes — ~10⁷ at
-dim 2048, past Janino's 64 KB method limit and the constant pool), and the
-q98 centroid update unrolled dim avg aggregates (a 2·dim-field buffer).
-operators/similarity.WIDE_DIM_CUTOVER gates both kernels onto a LONG-FORM
-rung (posexplode → ONE hash aggregate grouped by dimension) whose codegen
-size is O(1) in dim. These tests pin, at dim 512 against real DuckDB
-oracles and at dim 64 across rungs:
+dim 2048, past Janino's 64 KB method limit and the constant pool), or
+unrolls dim avg aggregates into one buffer. The k-means centroid update
+(kmeans_lloyd_rounds) and the power iteration (power_iteration_rounds)
+each have one LONG-FORM round body at every dim (posexplode → ONE hash
+aggregate grouped by dimension) whose codegen size is O(1) in dim. These
+tests pin, against real DuckDB oracles:
 
-- the wide rung is hash-exact vs the oracle (q148 via the O(dim)-size
-  long-form oracle twin, q98 via the parameterized kmeans oracle);
-- the two rungs are BIT-IDENTICAL where both can run (dim 64) — the gate
-  is semantics-free, like the LSH/driver-CC cutovers;
-- q93/q114 (already long-form by construction) stay oracle-exact at 512;
-- the wide rung compiles and runs at dim 2048 (the narrow spelling would
-  not), so the next decade of dim is a config change, not a rewrite.
+- both kernels are hash-exact at dim 512 (q148 via the O(dim)-size
+  long-form oracle twin, q98 via the parameterized kmeans oracle); the
+  dim-64 results are pinned by test_oracle_parity;
+- q93/q114 (long-form by construction) stay oracle-exact at 512;
+- power iteration compiles and runs at dim 2048, so the next decade of
+  dim is a config change, not a rewrite.
 
 q147 is listed with this family in VERDICT r10 but has no dim axis: its
 model is 3 fixed scalar features of the documents table, not an embedding
-loop — nothing to gate.
+loop.
 """
 
 from __future__ import annotations
@@ -36,9 +35,7 @@ import pyarrow.parquet as pq
 import pytest
 from pyspark.sql import functions as F
 
-from binwatch_spark.operators import similarity as sim
 from binwatch_spark.operators.similarity import (
-    WIDE_DIM_CUTOVER,
     kmeans_lloyd_rounds,
     power_iteration_rounds,
 )
@@ -54,13 +51,13 @@ STRIDE = 25  # ~5 seed centroids, the q98 convention
 
 def _pca_power_sql_long(k: int, dim: int) -> str:
     """Long-form twin of _pca_power_sql for ARBITRARY dim — the oracle the
-    dim≥512 rung is pinned against. The unrolled builder's SQL text is
+    dim-512 run is pinned against. The unrolled builder's SQL text is
     O(k·dim²) (each of dim sums re-spells the dim-term dot), which at dim
     512 is a ~30 MB statement; this twin stays O(dim) by using DuckDB's
     sequential-fold primitives, every one already
     parity-pinned elsewhere in the registry: list_dot_product for the
     projection s = x·v AND the norm (0.0-seeded ascending fold — the same
-    IEEE chain as the Spark wide rung's zip_with/aggregate and the driver
+    IEEE chain as the Spark kernel's zip_with/aggregate and the driver
     loop's ascending += ), unnest(range) + GROUP BY pos for the
     per-dimension DECIMAL(28,10) sums (exact, order-free), and
     list(… ORDER BY pos) to rebuild the direction between rounds."""
@@ -168,7 +165,6 @@ def _q148_at(dim: int, rounds: int):
 
 
 def test_q148_wide_rung_oracle_exact_dim512(spark, dim512_dir):
-    assert DIM >= WIDE_DIM_CUTOVER  # the rung under test IS the wide one
     problems = compare(
         spark,
         dim512_dir,
@@ -196,27 +192,10 @@ def test_q148_long_oracle_matches_registered_oracle_at_dim64(spark):
     assert a == b
 
 
-def test_q148_rungs_bit_identical_dim64(spark):
-    emb = (
-        load(spark, SF_SMALL, "embeddings")
-        .filter(F.col("embedding").isNotNull())
-        .select(F.col("embedding").alias("x"))
-        .persist()
-    )
-    try:
-        narrow = power_iteration_rounds(emb, "x", 3, dim=64, wide=False)
-        wide = power_iteration_rounds(emb, "x", 3, dim=64, wide=True)
-    finally:
-        emb.unpersist()
-    assert narrow == wide  # float ==, not approx: the rungs share bits
-
-
 def test_q98_wide_rung_oracle_exact_dim512(spark, dim512_dir):
     def fn(sp, sf_dir):
         emb = load(sp, sf_dir, "embeddings")
-        return kmeans_lloyd_rounds(
-            emb, "vec_id", "embedding", STRIDE, dim=DIM
-        )
+        return kmeans_lloyd_rounds(emb, "vec_id", "embedding", STRIDE)
 
     problems = compare(
         spark,
@@ -226,15 +205,6 @@ def test_q98_wide_rung_oracle_exact_dim512(spark, dim512_dir):
         _kmeans_sql(dim=DIM, stride=STRIDE),
     )
     assert not problems, "\n".join(problems)
-
-
-def test_kmeans_rungs_identical_dim64(spark, monkeypatch):
-    emb = load(spark, SF_SMALL, "embeddings")
-    base = kmeans_lloyd_rounds(emb, "vec_id", "embedding", 25).collect()
-    monkeypatch.setattr(sim, "WIDE_DIM_CUTOVER", 1)  # force long-form rung
-    forced = kmeans_lloyd_rounds(emb, "vec_id", "embedding", 25).collect()
-    canon = lambda rows: sorted((r[0], r[1], r[2]) for r in rows)  # noqa: E731
-    assert canon(base) == canon(forced)
 
 
 @pytest.mark.parametrize(
@@ -250,9 +220,9 @@ def test_long_form_family_oracle_exact_dim512(spark, dim512_dir, qname):
 
 def test_q148_wide_rung_runs_at_dim2048(spark, tmp_path):
     """Compile-and-run proof one decade further: at dim 2048 the unrolled
-    spelling would build ~4M expression nodes (it is not attempted — it
-    hangs analysis); the wide rung is one posexplode + one aggregate and
-    finishes in seconds."""
+    spelling would build ~4M expression nodes (it hangs analysis); the
+    long-form round is one posexplode + one aggregate and finishes in
+    seconds."""
     d = tmp_path / "dim2048"
     d.mkdir()
     for name in TABLE_NAMES:

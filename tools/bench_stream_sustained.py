@@ -33,8 +33,9 @@ batch history; joined pairs equal the batch range join).
 
 Usage: python tools/bench_stream_sustained.py [--minutes 4]
          [--rows-per-sec 20000] [--pattern sessions|scd2|interval|all]
-Output: a ``sustained`` section merged into BENCH_stream.json (or
-$BENCH_STREAM_OUT).
+Output: a ``sustained`` section merged into /tmp/BENCH_stream.json (or
+$BENCH_STREAM_OUT). The repo's ``BENCH_stream.json`` is a historical
+record and is not rewritten by default.
 """
 
 from __future__ import annotations
@@ -458,7 +459,7 @@ def main() -> None:
         "steal_cpu_total": round(steal_seconds() - steal0, 1),
         "patterns": results,
     }
-    out = os.environ.get("BENCH_STREAM_OUT", "BENCH_stream.json")
+    out = os.environ.get("BENCH_STREAM_OUT", "/tmp/BENCH_stream.json")
     try:
         with open(out) as f:
             record = json.load(f)
